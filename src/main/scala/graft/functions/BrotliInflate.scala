@@ -50,8 +50,8 @@ import org.apache.spark.sql.types._
   * zero-rule violations, over-subscribed or incomplete prefix codes,
   * context-map value out of range, distance ≤ 0 or past window,
   * insert/copy past MLEN, trailing garbage, nonzero padding — NULLs
-  * the WHOLE result; output capped at [[MaxOutputBytes]] (the family
-  * 64 MB bomb cap). Scale shape: map-only, codegen'd, fuses into the
+  * the WHOLE result; output capped at [[Decompression.MaxOutputBytes]]
+  * (the family 64 MB bomb cap). Scale shape: map-only, codegen'd, fuses into the
   * scan; working state is the output buffer plus O(alphabet) tables.
   */
 case class BrotliInflate(child: Expression) extends UnaryExpression {
@@ -86,8 +86,7 @@ case class BrotliInflate(child: Expression) extends UnaryExpression {
 
 object BrotliInflate {
 
-  /** Family-wide decompression-bomb cap. */
-  val MaxOutputBytes: Int = 64 * 1024 * 1024
+  import Decompression.MaxOutputBytes
 
   /** RFC 7932 Appendix A dictionary data (122,784 bytes), extracted
     * once from the system libbrotli by tools/extract_brotli_dict.py.

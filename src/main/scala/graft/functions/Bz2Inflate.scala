@@ -37,8 +37,8 @@ import org.apache.spark.sql.types._
   * Family contract: any malformation — bad magic, randomized bit,
   * origPtr past block, over-long code lengths, selector out of range,
   * symbol past EOB, BWT/RLE1 overrun, CRC mismatch, trailing garbage —
-  * NULLs the WHOLE result; output is capped at [[MaxOutputBytes]]
-  * (the family's 64 MB bomb cap). Pinned against two independent
+  * NULLs the WHOLE result; output is capped at
+  * [[Decompression.MaxOutputBytes]] (the family's 64 MB bomb cap). Pinned against two independent
   * implementations in Bz2InflateSpec: frozen bzip2(1) CLI output and
   * a commons-compress round-trip battery. Scale shape: map-only, codegen'd, fuses into the
   * scan; working state is one block (≤ 900k × ~10 int/byte arrays).
@@ -75,8 +75,7 @@ case class Bz2Inflate(child: Expression) extends UnaryExpression {
 
 object Bz2Inflate {
 
-  /** Family-wide decompression-bomb cap. */
-  val MaxOutputBytes: Int = 64 * 1024 * 1024
+  import Decompression.MaxOutputBytes
 
   private val MaxCodeLen = 23 // BZ_MAX_CODE_LEN in the reference impl
 

@@ -6,203 +6,53 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
-/** The two checksums the compressed-source family's containers carry —
-  * CRC-32 (ISO 3309 / RFC 1952 §8, the gzip/PNG/ZIP polynomial
-  * 0xEDB88320, reflected) and Adler-32 (RFC 1950 §8) — implemented from
-  * the public specifications so the source decoders ([[GzipInflate]],
-  * [[PngPixels]], [[ZipEntries]]) can VERIFY integrity instead of
-  * carrying a documented-unverified caveat: at 100 TB a silently
-  * bit-rotted archive member must NULL, not decode to garbage that
-  * poisons dedup fingerprints downstream.
+/** The checksums the compressed-source family's containers carry, as
+  * calls into libraries already on the classpath: CRC-32 (gzip, PNG,
+  * ZIP) and Adler-32 (zlib) from `java.util.zip`, XXH32 (LZ4 frames)
+  * and XXH64 (zstd frames) from lz4-java's `XXHashFactory`. Each takes
+  * a `(from, len)` slice and returns the unsigned value in a Long
+  * (XXH64: the full signed 64-bit value).
   *
-  * Independence for testing: Spark's builtin `crc32()` and the JDK's
-  * `java.util.zip.{CRC32, Adler32}` are independent implementations of
-  * the same specs — ChecksumsSpec pins this table-driven code against
-  * both, and the query-side constructions use the BUILTIN `crc32()` so
-  * a construct/verify slip cannot cancel out.
+  * Independence for testing: the query-side constructions use Spark's
+  * BUILTIN `crc32()`, so a construct/verify slip cannot cancel out.
   */
 object Checksums {
 
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var n = 0
-    while (n < 256) {
-      var c = n
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1) != 0) 0xedb88320 ^ (c >>> 1) else c >>> 1
-        k += 1
-      }
-      t(n) = c
-      n += 1
-    }
-    t
-  }
+  private val xxHash = net.jpountz.xxhash.XXHashFactory.fastestInstance()
+  private val xxHash32 = xxHash.hash32()
+  private val xxHash64 = xxHash.hash64()
 
-  /** IEEE CRC-32 over bytes[from, from+len), as an unsigned value in a
-    * Long — the gzip trailer / PNG chunk / ZIP entry checksum.
-    */
+  /** IEEE CRC-32 over bytes[from, from+len). */
   def crc32(b: Array[Byte], from: Int, len: Int): Long = {
-    var c = 0xffffffff
-    var i = from
-    val end = from + len
-    while (i < end) {
-      c = CrcTable((c ^ b(i)) & 0xff) ^ (c >>> 8)
-      i += 1
-    }
-    (c ^ 0xffffffff).toLong & 0xffffffffL
+    val c = new java.util.zip.CRC32()
+    c.update(b, from, len)
+    c.getValue
   }
 
-  /** Adler-32 over bytes[from, from+len) (RFC 1950 §8: s1/s2 mod 65521,
-    * s2 seeded 0, s1 seeded 1). Accumulators are Long; the 5552-byte
-    * inner stride (zlib's NMAX) keeps the running s2 far below Long
-    * range between reductions while amortizing the two mod ops.
-    */
+  /** Adler-32 (RFC 1950 §8) over bytes[from, from+len). */
   def adler32(b: Array[Byte], from: Int, len: Int): Long = {
-    val Base = 65521
-    var s1 = 1L
-    var s2 = 0L
-    var i = from
-    var remaining = len
-    while (remaining > 0) {
-      val stride = math.min(remaining, 5552)
-      val end = i + stride
-      while (i < end) {
-        s1 += b(i) & 0xff
-        s2 += s1
-        i += 1
-      }
-      s1 %= Base
-      s2 %= Base
-      remaining -= stride
-    }
-    ((s2 << 16) | s1) & 0xffffffffL
+    val a = new java.util.zip.Adler32()
+    a.update(b, from, len)
+    a.getValue
   }
 
   def adler32_fn(c: Column): Column =
     GraftColumnBridge.column(Adler32Fn(GraftColumnBridge.expression(c)))
 
-  private val X1 = 0x9e3779b1 // 2654435761
-  private val X2 = 0x85ebca77 // 2246822519
-  private val X3 = 0xc2b2ae3d // 3266489917
-  private val X4 = 0x27d4eb2f // 668265263
-  private val X5 = 0x165667b1 // 374761393
-
-  /** XXH32 over bytes[from, from+len) (the public xxHash spec — the
-    * checksum the LZ4 FRAME format carries in its header/block/content
-    * fields), as an unsigned value in a Long. Int arithmetic wraps
-    * mod 2^32 exactly as the spec's u32 does.
+  /** XXH32 over bytes[from, from+len): the checksum the LZ4 frame format
+    * carries in its header, block and content fields.
     */
-  def xxh32(b: Array[Byte], from: Int, len: Int, seed: Int): Long = {
-    def u32(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    val end = from + len
-    var p = from
-    var acc = 0
-    if (len >= 16) {
-      var a1 = seed + X1 + X2
-      var a2 = seed + X2
-      var a3 = seed
-      var a4 = seed - X1
-      while (p + 16 <= end) {
-        a1 = Integer.rotateLeft(a1 + u32(p) * X2, 13) * X1
-        a2 = Integer.rotateLeft(a2 + u32(p + 4) * X2, 13) * X1
-        a3 = Integer.rotateLeft(a3 + u32(p + 8) * X2, 13) * X1
-        a4 = Integer.rotateLeft(a4 + u32(p + 12) * X2, 13) * X1
-        p += 16
-      }
-      acc = Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
-        Integer.rotateLeft(a3, 12) + Integer.rotateLeft(a4, 18)
-    } else {
-      acc = seed + X5
-    }
-    acc += len
-    while (p + 4 <= end) {
-      acc = Integer.rotateLeft(acc + u32(p) * X3, 17) * X4
-      p += 4
-    }
-    while (p < end) {
-      acc = Integer.rotateLeft(acc + (b(p) & 0xff) * X5, 11) * X1
-      p += 1
-    }
-    acc ^= acc >>> 15
-    acc *= X2
-    acc ^= acc >>> 13
-    acc *= X3
-    acc ^= acc >>> 16
-    acc.toLong & 0xffffffffL
-  }
+  def xxh32(b: Array[Byte], from: Int, len: Int, seed: Int): Long =
+    xxHash32.hash(b, from, len, seed).toLong & 0xffffffffL
 
   def xxh32_fn(c: Column): Column =
     GraftColumnBridge.column(Xxh32Fn(GraftColumnBridge.expression(c)))
 
-  private val Y1 = 0x9e3779b185ebca87L
-  private val Y2 = 0xc2b2ae3d27d4eb4fL
-  private val Y3 = 0x165667b19e3779f9L
-  private val Y4 = 0x85ebca77c2b2ae63L
-  private val Y5 = 0x27d4eb2f165667c5L
-
-  /** XXH64 over bytes[from, from+len) (the public xxHash spec — the
-    * checksum whose LOW 4 BYTES the Zstandard frame format carries as
-    * its Content_Checksum, RFC 8878 §3.1.1). Long arithmetic wraps
-    * mod 2^64 exactly as the spec's u64 does. Pinned value-for-value
-    * against lz4-java's independent XXHash64 in ChecksumsSpec.
+  /** XXH64 over bytes[from, from+len): the checksum whose LOW 4 BYTES
+    * the Zstandard frame format carries as its Content_Checksum.
     */
-  def xxh64(b: Array[Byte], from: Int, len: Int, seed: Long): Long = {
-    def u64(i: Int): Long = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24) |
-      ((b(i + 4) & 0xffL) << 32) | ((b(i + 5) & 0xffL) << 40) |
-      ((b(i + 6) & 0xffL) << 48) | ((b(i + 7) & 0xffL) << 56)
-    def u32(i: Int): Long = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    def round(acc: Long, v: Long): Long =
-      java.lang.Long.rotateLeft(acc + v * Y2, 31) * Y1
-    val end = from + len
-    var p = from
-    var acc = 0L
-    if (len >= 32) {
-      var a1 = seed + Y1 + Y2
-      var a2 = seed + Y2
-      var a3 = seed
-      var a4 = seed - Y1
-      while (p + 32 <= end) {
-        a1 = round(a1, u64(p))
-        a2 = round(a2, u64(p + 8))
-        a3 = round(a3, u64(p + 16))
-        a4 = round(a4, u64(p + 24))
-        p += 32
-      }
-      acc = java.lang.Long.rotateLeft(a1, 1) +
-        java.lang.Long.rotateLeft(a2, 7) +
-        java.lang.Long.rotateLeft(a3, 12) +
-        java.lang.Long.rotateLeft(a4, 18)
-      acc = (acc ^ round(0L, a1)) * Y1 + Y4
-      acc = (acc ^ round(0L, a2)) * Y1 + Y4
-      acc = (acc ^ round(0L, a3)) * Y1 + Y4
-      acc = (acc ^ round(0L, a4)) * Y1 + Y4
-    } else {
-      acc = seed + Y5
-    }
-    acc += len.toLong
-    while (p + 8 <= end) {
-      acc = java.lang.Long.rotateLeft(acc ^ round(0L, u64(p)), 27) * Y1 + Y4
-      p += 8
-    }
-    if (p + 4 <= end) {
-      acc = java.lang.Long.rotateLeft(acc ^ (u32(p) * Y1), 23) * Y2 + Y3
-      p += 4
-    }
-    while (p < end) {
-      acc = java.lang.Long.rotateLeft(acc ^ ((b(p) & 0xffL) * Y5), 11) * Y1
-      p += 1
-    }
-    acc ^= acc >>> 33
-    acc *= Y2
-    acc ^= acc >>> 29
-    acc *= Y3
-    acc ^= acc >>> 32
-    acc
-  }
+  def xxh64(b: Array[Byte], from: Int, len: Int, seed: Long): Long =
+    xxHash64.hash(b, from, len, seed)
 
   def xxh64_fn(c: Column): Column =
     GraftColumnBridge.column(Xxh64Fn(GraftColumnBridge.expression(c)))
@@ -211,8 +61,7 @@ object Checksums {
 /** xxh64(binary) → BIGINT (the full signed 64-bit value, seed 0) — the
   * xxHash-64 checksum as a column function: the Zstandard-frame
   * counterpart of `xxh32` (zstd's Content_Checksum is its low 4
-  * bytes). Pinned against lz4-java's independent XXHash64 in
-  * ChecksumsSpec.
+  * bytes).
   */
 case class Xxh64Fn(child: Expression) extends UnaryExpression {
 
@@ -246,8 +95,6 @@ case class Xxh64Fn(child: Expression) extends UnaryExpression {
 
 /** xxh32(binary) → BIGINT — the xxHash-32 checksum as a column
   * function (seed 0), the LZ4-frame counterpart of `crc32()`/`adler32`.
-  * Pinned against the independent lz4-java XXHash32 implementation in
-  * ChecksumsSpec.
   */
 case class Xxh32Fn(child: Expression) extends UnaryExpression {
 
@@ -282,10 +129,8 @@ case class Xxh32Fn(child: Expression) extends UnaryExpression {
 /** adler32(binary) → BIGINT — the RFC 1950 checksum as a column
   * function, the zlib-envelope counterpart of Spark's builtin
   * `crc32()`. Used by the PNG driver query to CONSTRUCT valid zlib
-  * trailers in pure column space (the verifying decoder side is the
-  * same spec; independence comes from the JDK differential in
-  * ChecksumsSpec and the real-encoder vectors whose trailers were
-  * written by python-zlib).
+  * trailers in pure column space (the real-encoder vectors, whose
+  * trailers python-zlib wrote, keep the verifying side honest).
   */
 case class Adler32Fn(child: Expression) extends UnaryExpression {
 

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   * concatenated-member corpora split upstream).
   *
   * NULL for: wrong magic/CM, reserved FLG bits, truncated header or
-  * optional fields, ISIZE past the [[GzipInflate.MaxOutputBytes]]
+  * optional fields, ISIZE past the [[Decompression.MaxOutputBytes]]
   * zip-bomb guard, any deflate malformation / size mismatch, or a
   * CRC-32 / header CRC-16 mismatch.
   *
@@ -69,8 +69,7 @@ case class GzipInflate(child: Expression) extends UnaryExpression {
 
 object GzipInflate {
 
-  /** Zip-bomb guard on the trailer-declared output size (~64 MB). */
-  val MaxOutputBytes: Long = 64L * 1024 * 1024
+  import Decompression.MaxOutputBytes
 
   private val FTEXT = 1
   private val FHCRC = 2

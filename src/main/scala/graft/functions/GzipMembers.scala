@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * A member's size is unknown before decode, so each grows its buffer
   * geometrically (the [[ZlibInflate]] ladder: 4×remaining-input floor,
   * doubling only on [[Inflate]]'s distinct overflow signal, bounded by
-  * what remains of the named [[GzipMembers.MaxTotalOutputBytes]]
+  * what remains of the named [[Decompression.MaxOutputBytes]]
   * cumulative budget — the zip-bomb guard covers the whole blob, not
   * just one member).
   *
@@ -70,10 +70,6 @@ object GzipMembers {
 
   val Schema: DataType = ArrayType(BinaryType, containsNull = false)
 
-  /** Cumulative zip-bomb guard across ALL members of one blob (~64 MB,
-    * the family policy).
-    */
-  val MaxTotalOutputBytes: Long = 64L * 1024 * 1024
 
   private val MaxMembers = 65536
 
@@ -86,7 +82,7 @@ object GzipMembers {
     if (n < 18) return null // at least one complete member
     val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
     var p = 0
-    var budget = MaxTotalOutputBytes
+    var budget: Long = Decompression.MaxOutputBytes
     while (p < n) {
       if (out.size >= MaxMembers) return null
       val dataStart = GzipInflate.headerEnd(bytes, p)

@@ -1,97 +1,25 @@
 package graft.functions
 
-/** A complete RFC 1951 DEFLATE decoder — stored (BTYPE=00), fixed-Huffman
-  * (01) and dynamic-Huffman (10) blocks, canonical Huffman decoding and
-  * the LZ77 back-reference copy — written from the public specification
-  * so [[PngPixels]] can decode what real PNG encoders actually emit (the
-  * final retreat of the declared-fake codec line for PNG: with this,
-  * nothing about the format is stubbed).
+import java.util.zip.{DataFormatException, Inflater}
+
+/** Raw RFC 1951 DEFLATE decoding into a caller-sized buffer, done by the
+  * JDK's `java.util.zip.Inflater` in `nowrap` mode. This is the core
+  * under [[GzipInflate]], [[GzipMembers]], [[ZlibInflate]],
+  * [[ZipEntries]] and [[PngPixels]]; each of them checks its own header
+  * and trailer.
   *
-  * Decoding model (RFC 1951 §3.1.1, §3.2): the input is a bit stream
-  * packed LSB-first within bytes; Huffman codes are CANONICAL — fully
-  * determined by their code lengths (codes of the same length are
-  * consecutive integers ordered by symbol) — so decode walks the code
-  * bit-by-bit against per-length (count, first-code, symbol-offset)
-  * tables; length/distance symbols carry extra bits per the fixed
-  * tables of §3.2.5. The output buffer IS the 32K-window: back-references
-  * copy from what was already produced (byte-by-byte, so overlapping
-  * RLE-style references work as specified).
-  *
-  * Failure model: returns false — never throws, never reads or writes
-  * out of bounds — on any malformation: over/under-long streams, an
-  * invalid code (a bit path off the canonical table), an
-  * over-subscribed or empty Huffman code set, a distance reaching
-  * before the start of output, LEN/NLEN mismatch, or produced size ≠
-  * the expected size (`dst.length` is the contract: the caller knows
-  * the exact raw size from its container metadata, and anything else
-  * is corrupt).
-  *
-  * Work bound: O(dst.length + src bits) — the caller caps dst (see
-  * PngPixels.MaxRawBytes), so a zip-bomb stream cannot buy unbounded
-  * work: expansion is bounded by the declared output size, not by the
-  * compression ratio.
+  * Failure model: returns a negative code and never throws. The work is
+  * bounded by `dst.length`, which the caller caps at
+  * [[Decompression.MaxOutputBytes]], so a zip-bomb stream cannot buy
+  * more output than the caller allowed.
   */
 object Inflate {
 
-  private val MaxBits = 15
-
-  private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19,
-    23, 27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2,
-    2, 3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65,
-    97, 129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145,
-    8193, 12289, 16385, 24577)
-  private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6,
-    6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-  private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12,
-    3, 13, 2, 14, 1, 15)
-
-  /** Canonical Huffman tables from code lengths: per-length symbol
-    * counts + symbols sorted by (length, symbol). Construction rejects
-    * over-subscribed codes (Kraft sum > 1); incomplete codes are
-    * allowed at build time (the spec permits e.g. a single-symbol
-    * distance code) and surface as decode failures if a missing code
-    * is actually read.
-    */
-  private final class Huff(lengths: Array[Int]) {
-    val count = new Array[Int](MaxBits + 1)
-    var valid = true
-    lengths.foreach { l =>
-      if (l < 0 || l > MaxBits) valid = false else count(l) += 1
-    }
-    val symbols = new Array[Int](lengths.length)
-    if (valid) {
-      if (count(0) == lengths.length) valid = false // no codes at all
-      // Kraft check: left = codes still available after each length
-      var left = 1
-      var l = 1
-      while (l <= MaxBits && valid) {
-        left = (left << 1) - count(l)
-        if (left < 0) valid = false // over-subscribed
-        l += 1
-      }
-      if (valid) {
-        val offs = new Array[Int](MaxBits + 2)
-        var i = 1
-        while (i <= MaxBits) { offs(i + 1) = offs(i) + count(i); i += 1 }
-        var s = 0
-        while (s < lengths.length) {
-          if (lengths(s) != 0) {
-            symbols(offs(lengths(s))) = s
-            offs(lengths(s)) += 1
-          }
-          s += 1
-        }
-      }
-    }
-  }
-
-  /** @return bytes produced; -1 on malformed input; -2 when the stream
-    * is well-formed so far but the output would exceed dst (the
-    * grow-and-retry signal for callers like [[ZlibInflate]] whose
-    * container declares no output size). Success for the PNG caller
-    * additionally requires the count == dst.length.
+  /** @return bytes produced; -1 on malformed or truncated input; -2 when
+    * the stream is well-formed so far but its output would exceed dst
+    * (the grow-and-retry signal for callers like [[ZlibInflate]] whose
+    * container declares no output size). Callers that know the exact
+    * output size additionally require the count == dst.length.
     */
   def inflate(src: Array[Byte], from: Int, dst: Array[Byte]): Int = {
     val r = inflateTracked(src, from, dst)
@@ -99,165 +27,28 @@ object Inflate {
   }
 
   /** Like [[inflate]], additionally reporting WHERE the deflate stream
-    * ended — the multi-member need ([[GzipMembers]]): concatenated
-    * containers can only be walked if each member's compressed extent
-    * is known, and DEFLATE's extent is defined by its final-block bit,
-    * not by any length field. @return negative error codes as
-    * [[inflate]]; on success `(endByteOffset << 32) | produced` where
-    * endByteOffset is the first src index past the stream (the final
-    * block's last bit rounded up to a byte boundary).
+    * ended: DEFLATE's extent is defined by its final-block bit, not by a
+    * length field, so only the decoder can find the trailer that follows
+    * it ([[GzipMembers]] walks concatenated members this way). @return
+    * negative error codes as [[inflate]]; on success
+    * `(endByteOffset << 32) | produced` where endByteOffset is the first
+    * src index past the stream.
     */
   def inflateTracked(src: Array[Byte], from: Int, dst: Array[Byte]): Long = {
-    val nBits = src.length.toLong * 8
-    var bit = from.toLong * 8
-    var oi = 0
-
-    def bits(k: Int): Int = { // k <= 16, LSB-first; -1 on exhaustion
-      if (bit + k > nBits) return -1
-      var v = 0
-      var i = 0
-      while (i < k) {
-        val b = (src((bit >> 3).toInt) >> (bit & 7).toInt) & 1
-        v |= b << i
-        bit += 1
-        i += 1
+    val inf = new Inflater(true)
+    try {
+      inf.setInput(src, from, src.length - from)
+      var oi = 0
+      while (!inf.finished()) {
+        if (oi < dst.length) oi += inf.inflate(dst, oi, dst.length - oi)
+        // dst is full: the stream must end without another output byte
+        else if (inf.inflate(new Array[Byte](1)) > 0) return -2L
+        if (!inf.finished() && (inf.needsInput() || inf.needsDictionary()))
+          return -1L
       }
-      v
-    }
-
-    def decode(h: Huff): Int = { // canonical bit-at-a-time walk; -1 bad
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= MaxBits) {
-        val b = bits(1)
-        if (b < 0) return -1
-        code |= b
-        val cnt = h.count(len)
-        if (code - first < cnt) return h.symbols(index + code - first)
-        index += cnt
-        first = (first + cnt) << 1
-        code <<= 1
-        len += 1
-      }
-      -1
-    }
-
-    // 0 = end of block; -1 = malformed; -2 = output overflow
-    def block(litHuff: Huff, distHuff: Huff): Int = {
-      while (true) {
-        val sym = decode(litHuff)
-        if (sym < 0) return -1
-        if (sym < 256) {
-          if (oi >= dst.length) return -2
-          dst(oi) = sym.toByte
-          oi += 1
-        } else if (sym == 256) {
-          return 0
-        } else {
-          if (sym > 285) return -1
-          val li = sym - 257
-          val eb = bits(LenExtra(li)); if (eb < 0) return -1
-          val length = LenBase(li) + eb
-          val dsym = decode(distHuff)
-          if (dsym < 0 || dsym > 29) return -1
-          val db = bits(DistExtra(dsym)); if (db < 0) return -1
-          val dist = DistBase(dsym) + db
-          if (dist > oi) return -1 // before start of output
-          if (oi + length > dst.length) return -2
-          var i = 0
-          while (i < length) { // byte-by-byte: overlapping copies valid
-            dst(oi) = dst(oi - dist)
-            oi += 1
-            i += 1
-          }
-        }
-      }
-      0
-    }
-
-    // fixed tables built once per call (cheap: 288+30 lengths)
-    lazy val fixedLit = new Huff(Array.tabulate(288)(s =>
-      if (s < 144) 8 else if (s < 256) 9 else if (s < 280) 7 else 8))
-    lazy val fixedDist = new Huff(Array.fill(30)(5))
-
-    var finalBlock = false
-    while (!finalBlock) {
-      val bf = bits(1); if (bf < 0) return -1
-      finalBlock = bf == 1
-      val btype = bits(2); if (btype < 0) return -1
-      btype match {
-        case 0 => // stored: align, LEN/NLEN, raw copy
-          bit = (bit + 7) & ~7L
-          val len = bits(16); if (len < 0) return -1
-          val nlen = bits(16); if (nlen < 0) return -1
-          if ((len ^ nlen) != 0xffff) return -1
-          if (bit + len.toLong * 8 > nBits) return -1
-          if (oi + len > dst.length) return -2
-          var i = 0
-          while (i < len) {
-            dst(oi) = src((bit >> 3).toInt)
-            bit += 8
-            oi += 1
-            i += 1
-          }
-        case 1 =>
-          if (!fixedLit.valid || !fixedDist.valid) return -1
-          val r = block(fixedLit, fixedDist)
-          if (r < 0) return r
-        case 2 => // dynamic: code-length code, then lit/dist lengths
-          val hlit = bits(5); val hdist = bits(5); val hclen = bits(4)
-          if (hlit < 0 || hdist < 0 || hclen < 0) return -1
-          val nlit = hlit + 257
-          val ndist = hdist + 1
-          val ncl = hclen + 4
-          if (nlit > 286 || ndist > 30) return -1
-          val clLen = new Array[Int](19)
-          var i = 0
-          while (i < ncl) {
-            val v = bits(3); if (v < 0) return -1
-            clLen(ClOrder(i)) = v
-            i += 1
-          }
-          val clHuff = new Huff(clLen)
-          if (!clHuff.valid) return -1
-          val lens = new Array[Int](nlit + ndist)
-          var li = 0
-          while (li < nlit + ndist) {
-            val sym = decode(clHuff)
-            if (sym < 0) return -1
-            if (sym < 16) { lens(li) = sym; li += 1 }
-            else {
-              var repeat = 0
-              var value = 0
-              if (sym == 16) {
-                if (li == 0) return -1
-                value = lens(li - 1)
-                val e = bits(2); if (e < 0) return -1
-                repeat = 3 + e
-              } else if (sym == 17) {
-                val e = bits(3); if (e < 0) return -1
-                repeat = 3 + e
-              } else {
-                val e = bits(7); if (e < 0) return -1
-                repeat = 11 + e
-              }
-              if (li + repeat > nlit + ndist) return -1
-              var r = 0
-              while (r < repeat) { lens(li) = value; li += 1; r += 1 }
-            }
-          }
-          if (lens(256) == 0) return -1 // end-of-block must be codable
-          val litHuff = new Huff(java.util.Arrays.copyOfRange(lens, 0, nlit))
-          val distHuff = new Huff(
-            java.util.Arrays.copyOfRange(lens, nlit, nlit + ndist))
-          if (!litHuff.valid || !distHuff.valid) return -1
-          val r = block(litHuff, distHuff)
-          if (r < 0) return r
-        case _ => return -1 // BTYPE=11 reserved
-      }
-    }
-    (((bit + 7) >> 3) << 32) | oi.toLong
+      ((src.length - inf.getRemaining).toLong << 32) | oi.toLong
+    } catch {
+      case _: DataFormatException => -1L
+    } finally inf.end()
   }
 }

@@ -1,52 +1,36 @@
 package graft.functions
 
+import java.io.{IOException, InputStream}
+
+import net.jpountz.xxhash.{StreamingXXHash32, XXHashFactory}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
-/** In-engine LZ4 FRAME decompression (the lz4.org frame + block
-  * specifications — the OTHER compression family training shards ship,
-  * beside the DEFLATE world: .lz4 corpora, Kafka/Parquet payloads).
-  * The frame walk: magic 0x184D2204 (LE), FLG/BD descriptor (version
-  * 01, reserved bits clear, dictionaries out of scope), optional
-  * content-size field, and the HEADER CHECKSUM VERIFIED (HC = byte 1
-  * of XXH32 over the descriptor — [[Checksums.xxh32]], implemented
-  * from the public xxHash spec); then data blocks — a LE u32 whose
-  * high bit marks an UNCOMPRESSED block, the rest the stored size,
-  * bounded by the descriptor's declared block-max — each optionally
-  * followed by its own verified XXH32; the 0x00000000 EndMark; and the
-  * optional content XXH32 over the decompressed bytes, VERIFIED.
-  * The input is a frame SEQUENCE, as lz4(1) treats a .lz4 file:
-  * LZ4 frames decode and concatenate, SKIPPABLE frames (magic
+/** In-engine LZ4 FRAME decompression (`lz4_inflate(blob) → BINARY`)
+  * — the other compression family training shards ship beside the
+  * DEFLATE world (.lz4 corpora, Kafka/Parquet payloads). A small frame
+  * walker (`Lz4Inflate.Frames`) reads the frame layout and decodes its
+  * blocks; the checksums are lz4-java's XXH32.
+  *
+  * The input is a frame SEQUENCE, as lz4(1) treats a .lz4 file: LZ4
+  * frames decode and concatenate, and SKIPPABLE frames (magic
   * 0x184D2A5X + LE u32 payload size — the escape shard writers embed
-  * per-shard metadata in) are skipped wherever they appear; anything
-  * else between frames is rejected.
+  * per-shard metadata in) are skipped wherever they appear. Both block
+  * modes decode: in an independent-block frame a match stays inside its
+  * own block, in a linked-block frame (the LZ4F C API's and
+  * python-lz4's default) it may reach back 64 KiB into the frame's
+  * earlier blocks. The header, block and content checksums are
+  * verified, and a declared content size must match the output.
   *
-  * The LZ4 block decoder is the spec's sequence machine: a token's
-  * high nibble is the literal length (15 chains 255-extension bytes),
-  * literals copy, a LE u16 match offset (0 invalid), the low nibble +4
-  * the match length (15 chains extensions), matches copied
-  * byte-by-byte so overlaps replicate as specified. Blocks decode into
-  * ONE contiguous output buffer; under block-INDEPENDENT frames a
-  * match reaching before its own block's start is rejected (the
-  * declared independence is enforced, not assumed), while linked
-  * frames may reach the full produced window.
-  *
-  * Sizing: a declared content size is an exact-output contract
-  * (mismatch → NULL) and the frame's decode limit; without one the
-  * buffer grows by the declared block-max per block — never a
-  * re-decode — CLAMPED to the named [[Lz4Inflate.MaxOutputBytes]]
-  * zip-bomb guard: only an actual write past the limit fails, so a
-  * frame whose true output is just under the cap decodes.
-  *
-  * NULL for: bad magic/version/reserved bits, dictionary frames, a
-  * header-checksum mismatch, an oversized or malformed block, a
-  * match before the window, output past the guard or unequal to the
-  * declared content size, a block/content checksum mismatch, a
-  * missing EndMark, a truncated skippable frame, or inter-frame
-  * garbage.
+  * Contract, through [[Decompression.drain]]: NULL for empty
+  * input, bad magic, version or reserved bits, dictionary frames, a
+  * checksum or content-size mismatch, a malformed block, a match that
+  * reaches outside its window, a missing EndMark, a truncated skippable
+  * frame, inter-frame garbage, and output past the
+  * [[Decompression.MaxOutputBytes]] cap.
   */
 case class Lz4Inflate(child: Expression) extends UnaryExpression {
 
@@ -80,203 +64,204 @@ case class Lz4Inflate(child: Expression) extends UnaryExpression {
 
 object Lz4Inflate {
 
-  /** Zip-bomb guard on total decompressed output (~64 MB, the family
-    * policy).
-    */
-  val MaxOutputBytes: Long = 64L * 1024 * 1024
+  private val xxHash = XXHashFactory.fastestJavaInstance()
 
-  /** One LZ4 block from src[s, sEnd) into dst[d0, dLimit), matches
-    * allowed back to wStart. @return bytes produced, or -1.
+  /** How far back a match may reach: LZ4 offsets are 16-bit. */
+  private val Window = 65536
+
+  /** Static kernel shared by eval and generated code. */
+  def unlz4(bytes: Array[Byte]): Array[Byte] =
+    if (bytes == null || bytes.isEmpty) null
+    else Decompression.drain(new Frames(bytes))
+
+  /** lz4(1)'s frame sequence in `src` as a stream of decoded blocks.
+    * lz4-java cannot decode a linked block (its block decoders refuse a
+    * match before the block, its `LZ4FrameInputStream` any linked
+    * frame), and that stream allocates two block-max buffers, 4 MiB
+    * under lz4's default, per frame. So blocks are decoded here, into a
+    * buffer bounded by what their stored bytes can expand to (under 264
+    * output bytes per stored byte). Throws `IOException` on any
+    * malformation.
     */
-  private def block(src: Array[Byte], s0: Int, sEnd: Int,
-      dst: Array[Byte], d0: Int, dLimit: Int, wStart: Int): Int = {
-    var s = s0
-    var d = d0
-    while (true) {
-      if (s >= sEnd) return -1 // a block ends after a literals-only seq
-      val token = src(s) & 0xff
-      s += 1
-      var litLen = token >>> 4
-      if (litLen == 15) {
-        var b = 255
-        while (b == 255) {
-          if (s >= sEnd) return -1
-          b = src(s) & 0xff
-          s += 1
-          litLen += b
-          if (litLen < 0) return -1 // overflow
-        }
-      }
-      if (litLen > sEnd - s || litLen > dLimit - d) return -1
-      System.arraycopy(src, s, dst, d, litLen)
-      s += litLen
-      d += litLen
-      if (s == sEnd) return d - d0 // clean end: last sequence
-      if (s + 2 > sEnd) return -1
-      val offset = (src(s) & 0xff) | ((src(s + 1) & 0xff) << 8)
-      s += 2
-      if (offset == 0 || d - offset < wStart) return -1
-      var matchLen = (token & 0x0f) + 4
-      if ((token & 0x0f) == 15) {
-        var b = 255
-        while (b == 255) {
-          if (s >= sEnd) return -1
-          b = src(s) & 0xff
-          s += 1
-          matchLen += b
-          if (matchLen < 0) return -1
-        }
-      }
-      if (matchLen > dLimit - d) return -1
-      var i = 0
-      var m = d - offset
-      while (i < matchLen) { // byte-by-byte: overlapping copies valid
-        dst(d) = dst(m)
-        d += 1
-        m += 1
-        i += 1
-      }
+  private final class Frames(src: Array[Byte]) extends InputStream {
+    private var p = 0 // next unread src byte
+    private var inFrame = false
+    private var linked = false
+    private var maxBlock = 0
+    private var blockChecksum = false
+    private var contentSize = -1L
+    private var frameBytes = 0L
+    private var contentHash: StreamingXXHash32 = null
+    // out(at until end) is the current block; in a linked frame the
+    // bytes before `at` are the window its matches may reach back into
+    private var out = new Array[Byte](0)
+    private var at = 0
+    private var end = 0
+
+    private def corrupt(): Nothing = throw new IOException("corrupt LZ4")
+
+    private def u32(i: Int): Long = {
+      if (i + 4 > src.length) corrupt()
+      (src(i) & 0xffL) | ((src(i + 1) & 0xffL) << 8) |
+        ((src(i + 2) & 0xffL) << 16) | ((src(i + 3) & 0xffL) << 24)
     }
-    -1
-  }
 
-  /** Static kernel shared by eval and generated code: walks a SEQUENCE
-    * of frames — LZ4 frames (decoded, contents concatenated) and
-    * skippable frames (magic 0x184D2A5X + LE u32 size, skipped: the
-    * escape real shard writers embed per-shard metadata in) — exactly
-    * what lz4(1) does with a .lz4 file. Output across all frames shares
-    * the one [[MaxOutputBytes]] budget; any malformed frame NULLs the
-    * whole input (all-or-nothing, the family policy).
-    */
-  def unlz4(bytes: Array[Byte]): Array[Byte] = {
-    if (bytes == null) return null
-    val n = bytes.length
-    if (n < 8) return null // smallest valid: one empty skippable frame
-    def u32(i: Int): Long = (bytes(i) & 0xffL) |
-      ((bytes(i + 1) & 0xffL) << 8) | ((bytes(i + 2) & 0xffL) << 16) |
-      ((bytes(i + 3) & 0xffL) << 24)
-    var dst = new Array[Byte](0)
-    var produced = 0
-    // grow to at least `min` total capacity, clamped to the cap; the
-    // caller only requests min <= MaxOutputBytes, so this never fails —
-    // whether a block actually overflows is decided by the DECODE
-    // against dLimit, not by a pre-block estimate (r11 advice: a frame
-    // whose true output is just under the cap must decode)
-    def ensure(min: Long): Unit = {
-      if (min > dst.length) {
-        val want = math.min(MaxOutputBytes,
-          math.max(math.max(dst.length.toLong * 2, min), 65536L))
-        dst = java.util.Arrays.copyOf(dst, want.toInt)
-      }
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
     }
-    var p = 0
-    while (p < n) {
-      if (p + 4 > n) return null
-      val magic = u32(p)
-      if ((magic & 0xfffffff0L) == 0x184d2a50L) {
-        // skippable frame: LE u32 payload size, content ignored
-        if (p + 8 > n) return null
-        val sz = u32(p + 4)
-        if (sz > n - p - 8) return null
-        p += 8 + sz.toInt
-      } else if (magic == 0x184d2204L) {
-        p += 4
-        if (p + 3 > n) return null // descriptor + at least the EndMark
-        val flg = bytes(p) & 0xff
-        if ((flg >>> 6) != 1) return null // version must be 01
-        if ((flg & 0x02) != 0) return null // reserved bit
-        if ((flg & 0x01) != 0) return null // DictID: out of scope
-        val blockIndep = (flg & 0x20) != 0
-        val blockChecksum = (flg & 0x10) != 0
-        val hasContentSize = (flg & 0x08) != 0
-        val contentChecksum = (flg & 0x04) != 0
-        val bd = bytes(p + 1) & 0xff
-        if ((bd & 0x8f) != 0) return null // reserved BD bits
-        val bmax = (bd >>> 4) & 0x07
-        if (bmax < 4 || bmax > 7) return null
-        val maxBlock = 1 << (8 + 2 * bmax) // 4 -> 64 KB ... 7 -> 4 MB
-        val descStart = p
-        p += 2
-        var contentSize = -1L
-        if (hasContentSize) {
-          if (p + 8 > n) return null
-          contentSize = u32(p) | (u32(p + 4) << 32)
-          if (contentSize < 0 ||
-            produced + contentSize > MaxOutputBytes) return null
-          p += 8
-        }
-        // header checksum: byte 1 of XXH32 over FLG..end-of-descriptor
-        if (p + 1 > n) return null
-        val hc = (Checksums.xxh32(bytes, descStart, p - descStart, 0) >> 8) & 0xff
-        if ((bytes(p) & 0xff) != hc) return null
-        p += 1
 
-        val frameStart = produced
-        // a declared content size is an exact-output contract: size the
-        // buffer to it ONCE and never grow past it for this frame
-        if (contentSize >= 0) ensure(frameStart + contentSize)
-        var ended = false
-        while (!ended) {
-          if (p + 4 > n) return null
+    override def read(dst: Array[Byte], off: Int, len: Int): Int = {
+      while (at == end) if (!nextBlock()) return -1
+      val n = math.min(len, end - at)
+      System.arraycopy(out, at, dst, off, n)
+      at += n
+      n
+    }
+
+    /** Moves to the next block with output, walking frame headers,
+      * EndMarks and skippable frames on the way. False at end of input.
+      */
+    private def nextBlock(): Boolean = {
+      while (true) {
+        if (!inFrame) {
+          if (p == src.length) return false
+          val magic = u32(p)
+          if ((magic & 0xfffffff0L) == 0x184d2a50L) {
+            val size = u32(p + 4)
+            if (size > src.length - p - 8) corrupt()
+            p += 8 + size.toInt
+          } else if (magic == 0x184d2204L) header()
+          else corrupt()
+        } else {
           val word = u32(p)
           p += 4
-          if (word == 0L) ended = true
+          if (word == 0L) endFrame()
           else {
             val stored = (word & 0x7fffffffL).toInt
-            val uncompressed = (word & 0x80000000L) != 0
-            if (stored < 0 || stored > maxBlock) return null
-            if (stored > n - p) return null
-            // decode limit: the declared size when present, else the cap
-            // — capacity grows by at most a block, clamped to the cap,
-            // and ONLY an actual write past dLimit fails. The per-block
-            // growth is the ARITHMETIC expansion bound, not the declared
-            // block-max: a block of `stored` bytes can emit at most
-            // ~262·stored (literals ≤ stored; a no-extension match costs
-            // 3 bytes for ≤ 18 out; every extension byte adds ≤ 255), so
-            // a 4 MB-block-max frame holding tiny blocks no longer
-            // allocates 4 MB per block (measured ×19 on `ScaleProbe
-            // media`'s 112-byte frames).
-            val dLimit =
-              if (contentSize >= 0) (frameStart + contentSize).toInt
-              else {
-                val bound = math.min(maxBlock.toLong,
-                  if (uncompressed) stored.toLong else 264L * stored + 64L)
-                ensure(math.min(MaxOutputBytes, produced.toLong + bound))
-                dst.length
-              }
-            val out =
-              if (uncompressed) {
-                if (stored > dLimit - produced) return null
-                System.arraycopy(bytes, p, dst, produced, stored)
-                stored
-              } else {
-                block(bytes, p, p + stored, dst, produced, dLimit,
-                  if (blockIndep) produced else frameStart)
-              }
-            if (out < 0 || out > maxBlock) return null
-            p += stored
-            if (blockChecksum) {
-              // the checksum covers the STORED block bytes
-              if (p + 4 > n) return null
-              if (Checksums.xxh32(bytes, p - stored, stored, 0) != u32(p))
-                return null
-              p += 4
-            }
-            produced += out
+            if (stored > maxBlock || stored > src.length - p) corrupt()
+            if (blockChecksum &&
+              Checksums.xxh32(src, p, stored, 0) != u32(p + stored)) corrupt()
+            val keep = if (linked) math.min(end, Window) else 0
+            System.arraycopy(out, end - keep, out, 0, keep)
+            val raw = (word & 0x80000000L) != 0
+            val room =
+              if (raw) stored else math.min(maxBlock, 264L * stored + 64).toInt
+            if (out.length < keep + room)
+              out = java.util.Arrays.copyOf(out, keep + room)
+            at = keep
+            end =
+              if (raw) {
+                System.arraycopy(src, p, out, keep, stored)
+                keep + stored
+              } else sequences(p, p + stored, keep + room)
+            p += stored + (if (blockChecksum) 4 else 0)
+            frameBytes += end - at
+            if (contentHash != null) contentHash.update(out, at, end - at)
+            if (end > at) return true
           }
         }
-        if (contentSize >= 0 && (produced - frameStart).toLong != contentSize)
-          return null
-        if (contentChecksum) {
-          if (p + 4 > n) return null
-          if (Checksums.xxh32(dst, frameStart, produced - frameStart, 0)
-            != u32(p)) return null
-          p += 4
-        }
-      } else return null // not an LZ4 frame, not skippable
+      }
+      false
     }
-    if (produced == dst.length) dst
-    else java.util.Arrays.copyOf(dst, produced)
+
+    /** Decodes the LZ4 sequences in src(s0 until sEnd) into `out` from
+      * `at`, never writing at or past `limit`; a match may copy from
+      * anywhere in `out` before it. Returns where the output ends.
+      */
+    private def sequences(s0: Int, sEnd: Int, limit: Int): Int = {
+      var s = s0
+      var d = at
+      while (true) {
+        if (s >= sEnd) corrupt() // the last sequence must be literals only
+        val token = src(s) & 0xff
+        s += 1
+        var lit = token >>> 4
+        if (lit == 15) { // a length of 15 continues in extension bytes
+          var b = 255
+          while (b == 255) {
+            if (s >= sEnd) corrupt()
+            b = src(s) & 0xff
+            s += 1
+            lit += b
+          }
+        }
+        if (lit > sEnd - s || lit > limit - d) corrupt()
+        System.arraycopy(src, s, out, d, lit)
+        s += lit
+        d += lit
+        if (s == sEnd) return d
+        if (s + 2 > sEnd) corrupt()
+        val offset = (src(s) & 0xff) | ((src(s + 1) & 0xff) << 8)
+        s += 2
+        if (offset == 0 || offset > d) corrupt()
+        var len = (token & 0x0f) + 4
+        if (len == 19) {
+          var b = 255
+          while (b == 255) {
+            if (s >= sEnd) corrupt()
+            b = src(s) & 0xff
+            s += 1
+            len += b
+          }
+        }
+        if (len > limit - d) corrupt()
+        if (offset >= len) System.arraycopy(out, d - offset, out, d, len)
+        else { // byte by byte: an overlapping match repeats its start
+          var m = d - offset
+          val stop = m + len
+          while (m < stop) {
+            out(m + offset) = out(m)
+            m += 1
+          }
+        }
+        d += len
+      }
+      d
+    }
+
+    /** Frame descriptor: version 01, no dictionary id, reserved bits
+      * clear, a 64 KB .. 4 MB block maximum, a content size that fits a
+      * signed long, and the header checksum (byte 1 of XXH32 over the
+      * descriptor).
+      */
+    private def header(): Unit = {
+      val d = p + 4
+      if (d + 2 > src.length) corrupt()
+      val flg = src(d) & 0xff
+      val bd = src(d + 1) & 0xff
+      if ((flg & 0xc3) != 0x40 || (bd & 0x8f) != 0 || (bd >> 4) < 4)
+        corrupt()
+      linked = (flg & 0x20) == 0
+      maxBlock = 1 << (8 + 2 * (bd >> 4))
+      blockChecksum = (flg & 0x10) != 0
+      var q = d + 2
+      contentSize = -1L
+      if ((flg & 0x08) != 0) {
+        contentSize = u32(q) | (u32(q + 4) << 32)
+        if (contentSize < 0) corrupt()
+        q += 8
+      }
+      if (q >= src.length ||
+        ((Checksums.xxh32(src, d, q - d, 0) >> 8) & 0xff) != (src(q) & 0xff))
+        corrupt()
+      p = q + 1
+      frameBytes = 0L
+      contentHash =
+        if ((flg & 0x04) != 0) xxHash.newStreamingHash32(0) else null
+      at = 0
+      end = 0
+      inFrame = true
+    }
+
+    private def endFrame(): Unit = {
+      if (contentSize >= 0 && frameBytes != contentSize) corrupt()
+      if (contentHash != null) {
+        if ((contentHash.getValue & 0xffffffffL) != u32(p)) corrupt()
+        p += 4
+      }
+      inFrame = false
+    }
   }
 
   def lz4_inflate(c: Column): Column =

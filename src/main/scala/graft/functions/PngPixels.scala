@@ -7,14 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 
-/** REAL pixel decode over PNG containers — the declared-fake codec
-  * line is GONE for this format: the PNG container walk (RFC 2083 /
-  * ISO 15948 chunk grammar), the zlib envelope (RFC 1950), and a
-  * COMPLETE DEFLATE decoder ([[Inflate]]: stored, fixed-Huffman and
-  * dynamic-Huffman blocks with canonical Huffman decoding and the LZ77
-  * window, RFC 1951) take an 8-bit RGB PNG from any real encoder to
-  * exact per-channel pixel sums, entirely from the public
-  * specifications.
+/** REAL pixel decode over PNG containers: the PNG container walk
+  * (RFC 2083 / ISO 15948 chunk grammar), the zlib envelope (RFC 1950),
+  * and the DEFLATE stream ([[Inflate]], the JDK's raw inflater) take an
+  * 8-bit RGB PNG from any real encoder to exact per-channel pixel
+  * sums.
   *
   * Decode path: 8-byte PNG signature → chunk walk (big-endian u32
   * length + 4-char type; IHDR must be first per the spec) → IHDR
@@ -50,8 +47,9 @@ import org.apache.spark.sql.types._
   * every size bound checked BEFORE buffers are sized — a lying chunk
   * length or IHDR dimension cannot buy unbounded work or overflow:
   * compressed blocks EXPAND, so output is capped by the named
-  * [[PngPixels.MaxRawBytes]] zip-bomb guard (decode work is bounded by
-  * the declared output size, never by the compression ratio).
+  * [[Decompression.MaxOutputBytes]] zip-bomb guard (decode work is
+  * bounded by the declared output size, never by the compression
+  * ratio).
   */
 case class PngPixels(child: Expression) extends UnaryExpression {
 
@@ -85,12 +83,7 @@ case class PngPixels(child: Expression) extends UnaryExpression {
 
 object PngPixels {
 
-  /** Zip-bomb guard: max declared raw scanline bytes (~64 MB — a
-    * ~4600² RGB image) a single blob may decode to. Compressed deflate
-    * expands, so output size must be capped by POLICY, not input size;
-    * past this the blob is NULL rather than a memory/work hazard.
-    */
-  val MaxRawBytes: Long = 64L * 1024 * 1024
+  import Decompression.MaxOutputBytes
 
   val Schema: StructType = StructType(Seq(
     StructField("width", IntegerType, nullable = true),
@@ -229,9 +222,9 @@ object PngPixels {
     passes.foreach { case (pw, ph) =>
       if (pw > 0 && ph > 0) {
         val rb = rowBytesFor(pw)
-        if (ph > MaxRawBytes || rb > MaxRawBytes / ph) return null
+        if (ph > MaxOutputBytes || rb > MaxOutputBytes / ph) return null
         raw += ph * rb
-        if (raw > MaxRawBytes) return null
+        if (raw > MaxOutputBytes) return null
       }
     }
     if (raw == 0) return null

@@ -1,45 +1,37 @@
 package graft.functions
 
+import java.io.{ByteArrayInputStream, IOException}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
+import org.tukaani.xz.{BasicArrayCache, SeekableInputStream, SeekableXZInputStream, XZInputStream}
 
-/** In-engine XZ decode (`xz_inflate(bytes) → BINARY`) — the second half
-  * of the r12 verdict's "bzip2/xz" gap beside [[Bz2Inflate]]: `.xz` is
-  * the other format Wikipedia/academic dumps ship. Implements the
-  * public xz file format (tukaani spec 1.2.1) with the LZMA2 filter —
-  * the only filter `xz`(1) emits by default:
+/** In-engine XZ decode (`xz_inflate(bytes) → BINARY`), done by xz-java
+  * (org.tukaani, the library Spark ships) — `.xz` is the format
+  * Wikipedia and academic dumps ship beside [[Bz2Inflate]].
   *
-  *  - stream header: magic FD 37 7A 58 5A 00, stream flags (check type
-  *    none/CRC32/CRC64/SHA-256 — all four VERIFIED over the decoded
-  *    content; any other type rejects), CRC32 of the flags;
-  *  - blocks: CRC32-verified block header (filter chain must be exactly
-  *    one LZMA2 entry; declared compressed/uncompressed sizes, when
-  *    present, are enforced), LZMA2 chunk stream — uncompressed chunks
-  *    (with/without dict reset) and LZMA chunks with the full range
-  *    coder: literal/match/rep probability machine (lc/lp/pb contexts,
-  *    matched-literal decode), length coders, position slots with
-  *    reverse bit-tree and aligned bits, 4 repeat distances, state/
-  *    props/dict resets per the control byte — then padding and the
-  *    block check;
-  *  - index (block count + unpadded/uncompressed size varints, CRC32)
-  *    CROSS-CHECKED against the blocks actually decoded; stream footer
-  *    (CRC32, backward size = index size, flags echo, YZ magic), then
-  *    optional 4-aligned zero stream padding and CONCATENATED streams
-  *    (the GzipMembers/Bz2Inflate multi-member contract).
+  * xz-java verifies the stream header, block header, index and footer
+  * CRCs, the block check (none/CRC32/CRC64/SHA-256), the index against
+  * the decoded blocks, and 4-aligned zero padding between CONCATENATED
+  * streams. The wrapper adds three settings:
+  *  - only the lone LZMA2 filter `xz`(1) writes by default is accepted:
+  *    every block header must declare exactly one filter, so delta and
+  *    BCJ chains NULL instead of decoding;
+  *  - a decoder memory limit of the [[Decompression.MaxOutputBytes]]
+  *    cap plus 1 MiB of decoder tables, so `xz -9`'s 64 MiB dictionary
+  *    decodes but a stream that DECLARES a larger dictionary NULLs
+  *    before anything is allocated, even when its output would fit
+  *    under the cap;
+  *  - one shared `BasicArrayCache`, so the dictionary buffer is reused
+  *    across rows instead of allocated per row.
   *
-  * Family contract: any malformation — bad magics, header/index/footer
-  * CRCs, unknown check type, a non-LZMA2 filter (delta/BCJ are real but
-  * `xz` only adds them on request; rejecting loudly beats decoding
-  * wrongly), varint overflow, range-coder desync, a match before the
-  * dictionary-reset point, size mismatches, trailing garbage — NULLs
-  * the whole result. Output capped at [[MaxOutputBytes]] (the family's
-  * 64 MB bomb cap). Pinned against three independent implementations in
-  * XzInflateSpec: frozen xz(1) CLI output, an org.tukaani xz-java
-  * round-trip battery (the library Spark ships), and CPython-lzma
-  * fixtures. Scale shape: map-only, codegen'd, one linear pass.
+  * Wrapper contract, through [[Decompression.drain]]: any malformation
+  * — bad magics, a CRC or check mismatch, an unknown check type, a
+  * non-LZMA2 filter, size mismatches, trailing garbage — NULLs the whole
+  * result, and so does output past the cap.
   */
 case class XzInflate(child: Expression) extends UnaryExpression {
 
@@ -73,545 +65,58 @@ case class XzInflate(child: Expression) extends UnaryExpression {
 
 object XzInflate {
 
-  /** Family-wide decompression-bomb cap. */
-  val MaxOutputBytes: Int = 64 * 1024 * 1024
+  /** Decoder memory limit in KiB: the output cap plus 1 MiB of tables. */
+  private val MemoryLimitKiB = Decompression.MaxOutputBytes / 1024 + 1024
 
-  private class Bad extends RuntimeException
-  private def bad(): Nothing = throw new Bad
+  private val cache = BasicArrayCache.getInstance()
 
-  // ---- CRC64 (ECMA-182 reflected, poly 0xC96C5795D7870F42) ----
-  private val Crc64Table: Array[Long] = {
-    val t = new Array[Long](256)
-    var i = 0
-    while (i < 256) {
-      var c = i.toLong
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1L) != 0) (c >>> 1) ^ 0xC96C5795D7870F42L else c >>> 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private def crc64(b: Array[Byte], from: Int, len: Int): Long = {
-    var c = ~0L
-    var i = from
-    val to = from + len
-    while (i < to) {
-      c = Crc64Table(((c ^ b(i)) & 0xff).toInt) ^ (c >>> 8)
-      i += 1
-    }
-    ~c
-  }
-
-  private def crc32(b: Array[Byte], from: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, from, len)
-    c.getValue
-  }
-
-  // ---- LZMA range decoder ----
-  private final class RangeDec(src: Array[Byte], var pos: Int,
-      val end: Int) {
-    var range: Int = -1 // 0xFFFFFFFF
-    var code: Int = 0
-    // init: one zero byte then 4 BE code bytes
-    if (pos + 5 > end || src(pos) != 0) bad()
-    pos += 1
-    var i = 0
-    while (i < 4) { code = (code << 8) | (src(pos) & 0xff); pos += 1; i += 1 }
-
-    private def normalize(): Unit = {
-      if (Integer.compareUnsigned(range, 1 << 24) < 0) {
-        range <<= 8
-        code = (code << 8) | (if (pos < end) { val b = src(pos) & 0xff; pos += 1; b } else bad())
-      }
+  /** Static kernel shared by eval and generated code. */
+  def inflate(bytes: Array[Byte]): Array[Byte] =
+    if (bytes == null) null
+    else Decompression.drain {
+      if (!lzma2Only(bytes)) throw new IOException("filter chain")
+      new XZInputStream(new ByteArrayInputStream(bytes), MemoryLimitKiB,
+        cache)
     }
 
-    def bit(probs: Array[Short], idx: Int): Int = {
-      val p = probs(idx) & 0xffff
-      val bound = (range >>> 11) * p
-      val r =
-        if (Integer.compareUnsigned(code, bound) < 0) {
-          range = bound
-          probs(idx) = (p + ((2048 - p) >>> 5)).toShort
-          0
-        } else {
-          code -= bound
-          range -= bound
-          probs(idx) = (p - (p >>> 5)).toShort
-          1
-        }
-      normalize()
-      r
-    }
-
-    def bitTree(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var i = 0
-      while (i < nBits) { m = (m << 1) | bit(probs, off + m); i += 1 }
-      m - (1 << nBits)
-    }
-
-    def bitTreeReverse(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var sym = 0
-      var i = 0
-      while (i < nBits) {
-        val b = bit(probs, off + m)
-        m = (m << 1) | b
-        sym |= b << i
-        i += 1
-      }
-      sym
-    }
-
-    def direct(nBits: Int): Int = {
-      var res = 0
-      var i = 0
-      while (i < nBits) {
-        range = range >>> 1
-        code -= range
-        val t = 0 - (code >>> 31) // 0 if code >= 0 (bit 1), -1 if borrowed
-        code += range & t
-        if (code == range) bad() // spec: corruption marker
-        normalize()
-        res = (res << 1) + t + 1
-        i += 1
-      }
-      res
-    }
-
-    def finishedExactly: Boolean = pos == end && code == 0
-  }
-
-  // ---- LZMA decoder state (persists across LZMA2 chunks until reset) ----
-  private final class LzmaState(var lc: Int, var lp: Int, var pb: Int) {
-    var state = 0
-    var rep0 = 0; var rep1 = 0; var rep2 = 0; var rep3 = 0
-    var lit: Array[Short] = _
-    val isMatch = new Array[Short](12 << 4)
-    val isRep = new Array[Short](12)
-    val isRepG0 = new Array[Short](12)
-    val isRepG1 = new Array[Short](12)
-    val isRepG2 = new Array[Short](12)
-    val isRep0Long = new Array[Short](12 << 4)
-    val posSlot = new Array[Short](4 * 64)
-    val specPos = new Array[Short](115)
-    val align = new Array[Short](16)
-    // length coders: choice, choice2, low[16*8], mid[16*8], high[256]
-    val lenProbs = new Array[Short](2 + 16 * 8 + 16 * 8 + 256)
-    val repLenProbs = new Array[Short](2 + 16 * 8 + 16 * 8 + 256)
-    reset()
-
-    def setProps(props: Int): Unit = {
-      if (props >= 225) bad()
-      lc = props % 9
-      val r = props / 9
-      lp = r % 5
-      pb = r / 5
-      if (lc + lp > 4 || pb > 4) bad() // LZMA2 restriction
-    }
-
-    def reset(): Unit = {
-      state = 0
-      rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      lit = new Array[Short](0x300 << (lc + lp))
-      java.util.Arrays.fill(lit, 1024.toShort)
-      def f(a: Array[Short]): Unit = java.util.Arrays.fill(a, 1024.toShort)
-      f(isMatch); f(isRep); f(isRepG0); f(isRepG1); f(isRepG2)
-      f(isRep0Long); f(posSlot); f(specPos); f(align)
-      f(lenProbs); f(repLenProbs)
-    }
-  }
-
-  private def decodeLen(rc: RangeDec, p: Array[Short], posState: Int): Int =
-    if (rc.bit(p, 0) == 0) 2 + rc.bitTree(p, 2 + (posState << 3), 3)
-    else if (rc.bit(p, 1) == 0)
-      10 + rc.bitTree(p, 2 + 128 + (posState << 3), 3)
-    else 18 + rc.bitTree(p, 2 + 256, 8)
-
-  /** Decode one LZMA chunk of `unpacked` bytes from rc into out
-    * [outPos, outPos+unpacked), with matches bounded below by dictStart.
+  /** True when every block header declares exactly one filter (its flags
+    * byte, right after the header size, holds the filter count - 1). The
+    * seekable reader parses only the indexes here, no block data.
     */
-  private def lzmaChunk(rc: RangeDec, st: LzmaState, out: Array[Byte],
-      outPos0: Int, unpacked: Int, dictStart: Int,
-      maxDist: Long): Unit = {
-    var outPos = outPos0
-    val outEnd = outPos0 + unpacked
-    val pbMask = (1 << st.pb) - 1
-    val lpMask = (1 << st.lp) - 1
-    while (outPos < outEnd) {
-      // position contexts count bytes since the DICTIONARY RESET, not
-      // absolute output position (LZMA2 resets the position counter
-      // with the dictionary)
-      val rel = outPos - dictStart
-      val posState = rel & pbMask
-      if (rc.bit(st.isMatch, (st.state << 4) + posState) == 0) {
-        // literal
-        val prevByte = if (outPos > dictStart) out(outPos - 1) & 0xff else 0
-        val litState =
-          ((rel & lpMask) << st.lc) + (prevByte >>> (8 - st.lc))
-        val off = 0x300 * litState
-        var sym = 1
-        if (st.state >= 7) {
-          // matched literal
-          if (outPos - st.rep0 - 1 < dictStart) bad()
-          var matchByte = out(outPos - st.rep0 - 1) & 0xff
-          var break = false
-          while (!break && sym < 0x100) {
-            val matchBit = (matchByte >> 7) & 1
-            matchByte <<= 1
-            val b = rc.bit(st.lit,
-              off + ((1 + matchBit) << 8) + sym)
-            sym = (sym << 1) | b
-            if (matchBit != b) break = true
-          }
-          while (sym < 0x100)
-            sym = (sym << 1) | rc.bit(st.lit, off + sym)
-        } else {
-          while (sym < 0x100)
-            sym = (sym << 1) | rc.bit(st.lit, off + sym)
-        }
-        out(outPos) = sym.toByte
-        outPos += 1
-        st.state =
-          if (st.state < 4) 0 else if (st.state < 10) st.state - 3
-          else st.state - 6
-      } else {
-        var len = 0
-        if (rc.bit(st.isRep, st.state) == 0) {
-          // simple match: new distance
-          st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = st.rep0
-          len = decodeLen(rc, st.lenProbs, posState)
-          val lenState = math.min(len - 2, 3)
-          val slot = rc.bitTree(st.posSlot, lenState << 6, 6)
-          if (slot < 4) st.rep0 = slot
-          else {
-            val nd = (slot >> 1) - 1
-            var dist = (2 | (slot & 1)) << nd
-            if (slot < 14)
-              dist += rc.bitTreeReverse(st.specPos,
-                dist - slot - 1, nd)
-            else {
-              dist += rc.direct(nd - 4) << 4
-              dist += rc.bitTreeReverse(st.align, 0, 4)
-            }
-            st.rep0 = dist
-          }
-          if (st.rep0 == -1) bad() // 0xFFFFFFFF end marker: not in LZMA2
-          if ((st.rep0.toLong & 0xffffffffL) >= maxDist) bad()
-          st.state = if (st.state < 7) 7 else 10
-        } else {
-          // rep match
-          if (rc.bit(st.isRepG0, st.state) == 0) {
-            if (rc.bit(st.isRep0Long, (st.state << 4) + posState) == 0) {
-              // short rep: 1 byte at rep0
-              st.state = if (st.state < 7) 9 else 11
-              if (outPos - st.rep0 - 1 < dictStart) bad()
-              out(outPos) = out(outPos - st.rep0 - 1)
-              outPos += 1
-              // continue main loop
-              len = -1
-            }
-          } else {
-            var dist = 0
-            if (rc.bit(st.isRepG1, st.state) == 0) dist = st.rep1
-            else {
-              if (rc.bit(st.isRepG2, st.state) == 0) dist = st.rep2
-              else { dist = st.rep3; st.rep3 = st.rep2 }
-              st.rep2 = st.rep1
-            }
-            st.rep1 = st.rep0
-            st.rep0 = dist
-          }
-          if (len != -1) {
-            len = decodeLen(rc, st.repLenProbs, posState)
-            st.state = if (st.state < 7) 8 else 11
-          }
-        }
-        if (len > 0) {
-          if (len > outEnd - outPos) bad()
-          val src = outPos - st.rep0 - 1
-          if (src < dictStart) bad()
-          var k = 0
-          var m = src
-          while (k < len) {
-            out(outPos) = out(m)
-            outPos += 1; m += 1; k += 1
-          }
-        }
-      }
+  private def lzma2Only(bytes: Array[Byte]): Boolean = {
+    val index = new SeekableXZInputStream(new InMemory(bytes),
+      MemoryLimitKiB, cache)
+    (0 until index.getBlockCount).forall { i =>
+      val p = index.getBlockCompPos(i)
+      p + 1 < bytes.length && (bytes(p.toInt + 1) & 0x03) == 0
     }
   }
 
-  /** One little-endian base-128 varint (max 9 bytes, no non-minimal
-    * trailing zero groups). @return (value, bytes consumed)
-    */
-  private def varint(b: Array[Byte], from: Int, end: Int): (Long, Int) = {
-    var v = 0L
-    var i = 0
-    var done = false
-    while (!done) {
-      if (from + i >= end || i >= 9) bad()
-      val x = b(from + i) & 0xff
-      v |= (x & 0x7fL) << (7 * i)
-      i += 1
-      if ((x & 0x80) == 0) {
-        if (x == 0 && i > 1) bad() // non-minimal encoding
-        done = true
-      }
+  private final class InMemory(b: Array[Byte]) extends SeekableInputStream {
+    private var pos = 0L
+
+    override def length(): Long = b.length
+
+    override def position(): Long = pos
+
+    override def seek(p: Long): Unit = {
+      if (p < 0) throw new IOException("negative seek")
+      pos = p
     }
-    if (v < 0) bad()
-    (v, i)
-  }
 
-  def inflate(src: Array[Byte]): Array[Byte] = {
-    if (src == null) return null
-    try {
-      val out = new java.io.ByteArrayOutputStream(
-        math.min(math.max(64, src.length * 4), 1 << 20))
-      var p = 0
-      var streams = 0
-      while (p < src.length) {
-        p = decodeStream(src, p, out)
-        streams += 1
-        // stream padding: 4-aligned zero bytes before a next stream/EOF
-        while (p + 4 <= src.length && src(p) == 0 && src(p + 1) == 0 &&
-          src(p + 2) == 0 && src(p + 3) == 0) p += 4
-      }
-      if (streams == 0) bad()
-      out.toByteArray
-    } catch {
-      case _: Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
-    }
-  }
+    override def read(): Int =
+      if (pos >= b.length) -1 else { pos += 1; b(pos.toInt - 1) & 0xff }
 
-  /** Decode one stream starting at `p`; @return position just past it. */
-  private def decodeStream(src: Array[Byte], p0: Int,
-      out: java.io.ByteArrayOutputStream): Int = {
-    var p = p0
-    val n = src.length
-    // stream header
-    if (p + 12 > n) bad()
-    if ((src(p) & 0xff) != 0xFD || src(p + 1) != '7' || src(p + 2) != 'z' ||
-      src(p + 3) != 'X' || src(p + 4) != 'Z' || src(p + 5) != 0) bad()
-    if (src(p + 6) != 0) bad() // first flags byte must be null
-    val checkType = src(p + 7) & 0xff
-    if (checkType != 0x00 && checkType != 0x01 && checkType != 0x04 &&
-      checkType != 0x0A) bad()
-    def le32(i: Int): Long = (src(i) & 0xffL) | ((src(i + 1) & 0xffL) << 8) |
-      ((src(i + 2) & 0xffL) << 16) | ((src(i + 3) & 0xffL) << 24)
-    if (le32(p + 8) != crc32(src, p + 6, 2)) bad()
-    p += 12
-
-    // blocks until the index indicator (0x00 where a header size goes)
-    val recs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var indexAt = -1
-    while (indexAt < 0) {
-      if (p >= n) bad()
-      val hdrSizeEnc = src(p) & 0xff
-      if (hdrSizeEnc == 0) indexAt = p
+    override def read(dst: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (pos >= b.length) -1
       else {
-        val blockStart = p
-        val hdrSize = (hdrSizeEnc + 1) * 4
-        if (p + hdrSize > n) bad()
-        if (le32(p + hdrSize - 4) != crc32(src, p, hdrSize - 4)) bad()
-        val _ = blockStart // header start (for readability below)
-        val flags = src(p + 1) & 0xff
-        if ((flags & 0x3C) != 0) bad() // reserved bits
-        val nFilters = (flags & 3) + 1
-        val hasCompSize = (flags & 0x40) != 0
-        val hasUncompSize = (flags & 0x80) != 0
-        var q = p + 2
-        var declComp = -1L
-        var declUncomp = -1L
-        if (hasCompSize) {
-          val (v, used) = varint(src, q, p + hdrSize - 4); declComp = v
-          q += used
-        }
-        if (hasUncompSize) {
-          val (v, used) = varint(src, q, p + hdrSize - 4); declUncomp = v
-          q += used
-        }
-        // filter chain: exactly one LZMA2 entry (id 0x21, 1 props byte)
-        if (nFilters != 1) bad()
-        val (fid, u1) = varint(src, q, p + hdrSize - 4); q += u1
-        if (fid != 0x21) bad()
-        val (psz, u2) = varint(src, q, p + hdrSize - 4); q += u2
-        if (psz != 1 || q >= p + hdrSize - 4) bad()
-        val dictByte = src(q) & 0xff
-        q += 1
-        if (dictByte > 40) bad()
-        val dictSize: Long =
-          if (dictByte == 40) 0xffffffffL
-          else (2L | (dictByte & 1)) << (dictByte / 2 + 11)
-        // header padding must be zero
-        while (q < p + hdrSize - 4) { if (src(q) != 0) bad(); q += 1 }
-        p += hdrSize
-
-        // ---- LZMA2 chunk stream ----
-        val before = out.size()
-        var buf = out.toByteArray // decoded-so-far (block dict base below)
-        // grow-on-demand working buffer holding ALL output so far
-        var cap = math.max(buf.length + 65536, 65536)
-        buf = java.util.Arrays.copyOf(buf, cap)
-        var produced = before
-        var dictStart = before // LZMA2 dict reset point
-        val lz = new LzmaState(0, 0, 0)
-        var propsKnown = false
-        var ended = false
-        var firstChunk = true
-        val dataStart = p
-        while (!ended) {
-          if (p >= n) bad()
-          val ctrl = src(p) & 0xff
-          p += 1
-          if (ctrl == 0) ended = true
-          else if (ctrl == 1 || ctrl == 2) {
-            // a block's first chunk must reset the dictionary
-            if (firstChunk && ctrl != 1) bad()
-            firstChunk = false
-            // uncompressed chunk; 1 = dict reset
-            if (p + 2 > n) bad()
-            val sz = (((src(p) & 0xff) << 8) | (src(p + 1) & 0xff)) + 1
-            p += 2
-            if (p + sz > n) bad()
-            if (produced.toLong + sz > MaxOutputBytes) bad()
-            if (ctrl == 1) dictStart = produced
-            // uncompressed chunk resets lzma state per spec
-            if (produced + sz > cap) {
-              cap = math.max(cap * 2, produced + sz)
-              if (cap > MaxOutputBytes + 65536) cap = MaxOutputBytes + 65536
-              buf = java.util.Arrays.copyOf(buf, cap)
-            }
-            System.arraycopy(src, p, buf, produced, sz)
-            produced += sz
-            p += sz
-            if (propsKnown) lz.reset()
-          } else if (ctrl >= 0x80) {
-            val firstNow = firstChunk
-            firstChunk = false
-            val unpacked = (((ctrl & 0x1f) << 16) |
-              ((src(p) & 0xff) << 8) | (src(p + 1) & 0xff)) + 1
-            val packed = (((src(p + 2) & 0xff) << 8) |
-              (src(p + 3) & 0xff)) + 1
-            p += 4
-            val resetMode = (ctrl >> 5) & 3
-            if (firstNow && resetMode != 3) bad() // must reset dict+props
-            if (resetMode >= 2) {
-              if (p >= n) bad()
-              lz.setProps(src(p) & 0xff)
-              p += 1
-              propsKnown = true
-              lz.reset()
-            } else if (resetMode == 1) {
-              if (!propsKnown) bad()
-              lz.reset()
-            } else if (!propsKnown) bad()
-            if (resetMode == 3) dictStart = produced
-            if (p + packed > n) bad()
-            if (produced.toLong + unpacked > MaxOutputBytes) bad()
-            if (produced + unpacked > cap) {
-              cap = math.max(cap * 2, produced + unpacked)
-              if (cap > MaxOutputBytes + 65536) cap = MaxOutputBytes + 65536
-              buf = java.util.Arrays.copyOf(buf, cap)
-            }
-            val rc = new RangeDec(src, p, p + packed)
-            lzmaChunk(rc, lz, buf, produced, unpacked, dictStart, dictSize)
-            if (!rc.finishedExactly) bad()
-            produced += unpacked
-            p += packed
-          } else bad()
-        }
-        val compSize = (p - dataStart).toLong
-        val uncompSize = (produced - before).toLong
-        if (declComp >= 0 && declComp != compSize) bad()
-        if (declUncomp >= 0 && declUncomp != uncompSize) bad()
-        // block padding to 4-align of the compressed data
-        var pad = (4 - (compSize % 4)) % 4
-        while (pad > 0) {
-          if (p >= n || src(p) != 0) bad()
-          p += 1; pad -= 1
-        }
-        // block check over the DECODED bytes
-        val checkLen = checkType match {
-          case 0x00 => 0
-          case 0x01 => 4
-          case 0x04 => 8
-          case _ => 32
-        }
-        if (p + checkLen > n) bad()
-        checkType match {
-          case 0x01 =>
-            var want = 0L
-            var i = 0
-            while (i < 4) { want |= (src(p + i) & 0xffL) << (8 * i); i += 1 }
-            if (crcOf(buf, before, (uncompSize).toInt) != want) bad()
-          case 0x04 =>
-            var want = 0L
-            var i = 0
-            while (i < 8) { want |= (src(p + i) & 0xffL) << (8 * i); i += 1 }
-            if (crc64(buf, before, uncompSize.toInt) != want) bad()
-          case 0x0A =>
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            md.update(buf, before, uncompSize.toInt)
-            val dig = md.digest()
-            var i = 0
-            while (i < 32) { if (dig(i) != src(p + i)) bad(); i += 1 }
-          case _ => ()
-        }
-        p += checkLen
-        // commit the block's bytes
-        out.write(buf, before, uncompSize.toInt)
-        // unpadded size = header + data + check (NO padding)
-        recs += ((hdrSize.toLong + compSize + checkLen, uncompSize))
+        val n = math.min(len.toLong, b.length - pos).toInt
+        System.arraycopy(b, pos.toInt, dst, off, n)
+        pos += n
+        n
       }
-    }
-
-    // ---- index ----
-    val indexStart = indexAt
-    p = indexAt + 1
-    val (count, cu) = varint(src, p, n)
-    p += cu
-    if (count != recs.size) bad()
-    var i = 0
-    while (i < count) {
-      val (unp, a) = varint(src, p, n); p += a
-      val (usz, b) = varint(src, p, n); p += b
-      if (unp != recs(i)._1 || usz != recs(i)._2) bad()
-      i += 1
-    }
-    // index padding to 4-align
-    while (((p - indexStart) % 4) != 0) {
-      if (p >= n || src(p) != 0) bad()
-      p += 1
-    }
-    def le32b(i: Int): Long = (src(i) & 0xffL) | ((src(i + 1) & 0xffL) << 8) |
-      ((src(i + 2) & 0xffL) << 16) | ((src(i + 3) & 0xffL) << 24)
-    if (p + 4 > n) bad()
-    if (le32b(p) != crc32(src, indexStart, p - indexStart)) bad()
-    p += 4
-    val indexSize = (p - indexStart).toLong
-
-    // ---- stream footer ----
-    if (p + 12 > n) bad()
-    if (le32b(p) != crc32(src, p + 4, 6)) bad()
-    val backward = (le32b(p + 4) + 1) * 4
-    if (backward != indexSize) bad()
-    // flags must echo the header's
-    if (src(p + 8) != 0 || (src(p + 9) & 0xff) != (src(p0 + 7) & 0xff)) bad()
-    if (src(p + 10) != 'Y' || src(p + 11) != 'Z') bad()
-    p + 12
   }
-
-  private def crcOf(b: Array[Byte], from: Int, len: Int): Long =
-    crc32(b, from, len)
 
   def xz_inflate(c: Column): Column =
     GraftColumnBridge.column(XzInflate(GraftColumnBridge.expression(c)))

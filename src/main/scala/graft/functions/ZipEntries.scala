@@ -47,7 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: map-only, codegen'd; per-entry AND cumulative
   * decompressed bytes capped by the named
-  * [[ZipEntries.MaxTotalOutputBytes]] zip-bomb guard (deflate expands,
+  * [[Decompression.MaxOutputBytes]] zip-bomb guard (deflate expands,
   * so output is bounded by POLICY, never by compression ratio — the
   * cumulative cap closes the many-small-entries bomb a per-entry cap
   * alone would leave open).
@@ -91,10 +91,6 @@ object ZipEntries {
 
   val Schema: DataType = ArrayType(EntrySchema, containsNull = false)
 
-  /** Zip-bomb guard: cumulative decompressed bytes across all entries
-    * of one blob (~64 MB, the GzipInflate/PngPixels policy).
-    */
-  val MaxTotalOutputBytes: Long = 64L * 1024 * 1024
 
   private val MaxEntries = 65536
 
@@ -149,7 +145,7 @@ object ZipEntries {
       if (nameLen == 0 || p + 46 + nameLen > e) return null
       val name = new String(bytes, p + 46, nameLen,
         java.nio.charset.StandardCharsets.UTF_8)
-      if (usize > MaxTotalOutputBytes - totalOut) return null
+      if (usize > Decompression.MaxOutputBytes - totalOut) return null
       totalOut += usize
       // the entry's local header: signature, then ITS name/extra
       // lengths position the payload (a streaming writer's local extra

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   *
   * Unlike gzip, zlib declares NO output size, so decoding grows a
   * buffer geometrically (4×input floor, doubling on overflow, capped
-  * by the named [[ZlibInflate.MaxOutputBytes]] zip-bomb guard — total
+  * by the named [[Decompression.MaxOutputBytes]] zip-bomb guard — total
   * work stays ≤ 2× the final size by the geometric-series argument,
   * and a stream past the cap NULLs rather than buying unbounded
   * memory; [[Inflate]] signals output-overflow distinctly from
@@ -65,8 +65,7 @@ case class ZlibInflate(child: Expression) extends UnaryExpression {
 
 object ZlibInflate {
 
-  /** Zip-bomb guard on the grown output (~64 MB — the family policy). */
-  val MaxOutputBytes: Long = 64L * 1024 * 1024
+  import Decompression.MaxOutputBytes
 
   /** Static kernel shared by eval and generated code. */
   def unzlib(bytes: Array[Byte]): Array[Byte] = {
@@ -78,9 +77,9 @@ object ZlibInflate {
     if ((cmf & 0x0f) != 8 || (cmf >> 4) > 7) return null
     if ((flg & 0x20) != 0) return null // FDICT
     if ((cmf * 256 + flg) % 31 != 0) return null
-    // grow geometrically: Inflate needs the output buffer as its LZ77
-    // window, so "measure first" isn't possible; doubling keeps total
-    // work <= 2x the final decode
+    // grow geometrically: the size is unknown until the stream ends, so
+    // "measure first" isn't possible; doubling keeps total work <= 2x
+    // the final decode
     var cap = math.max(4L * n, 65536L)
     if (cap > MaxOutputBytes) cap = MaxOutputBytes
     var produced = -1

@@ -3310,9 +3310,9 @@ $steps,
     Some(tarOracleSql))
 
   /** COMPRESSED-block zstd lanes — the entropy-section structures SQL
-    * can assemble, putting `ZstdInflate.decodeBlock` itself on the
-    * driver oracle (the Huffman/FSE-coded wild shapes are pinned
-    * against zstd CLI + zstd-jni + aircompressor in ZstdInflateSpec;
+    * can assemble, putting libzstd's compressed-block path (through
+    * zstd_inflate) on the driver oracle (real encoder output from the
+    * zstd CLI, zstd-jni and aircompressor is pinned in ZstdInflateSpec;
     * this row proves the block grammar end-to-end cross-engine). All
     * frames use an explicit window descriptor (windowLog 17 = 128 KiB,
     * so Block_Maximum_Size is the full 128 KB); the remaining encodable
@@ -4213,15 +4213,15 @@ $steps,
       FROM documents ORDER BY doc_id"""))
 
   /** In-engine LZ4-frame source decode (functions/Lz4Inflate — the
-    * OTHER compression family training shards ship beside DEFLATE;
-    * frame walk + the spec's sequence machine, with the header XXH32,
-    * optional per-block XXH32 and content XXH32 all VERIFIED via
-    * Checksums.xxh32, itself pinned value-for-value against lz4-java's
-    * independent implementation). The query stores each doc's bytes as
-    * an UNCOMPRESSED block — the frame feature that keeps construction
-    * pure column arithmetic — while real compressed frames (lz4 CLI +
-    * lz4-java) are pinned in Lz4InflateSpec; the decoder path through
-    * the frame machinery is identical. Four lanes: a minimal frame
+    * OTHER compression family training shards ship beside DEFLATE; its
+    * own frame walker decodes the blocks and VERIFIES the header XXH32,
+    * optional per-block XXH32 and content XXH32 with Checksums.xxh32,
+    * which is lz4-java's XXHash32; the query builds its checksums with
+    * the same function). The query stores each
+    * doc's bytes as an UNCOMPRESSED block — the frame feature that keeps
+    * construction pure column arithmetic — while real compressed frames
+    * (lz4 CLI + lz4-java) are pinned in Lz4InflateSpec; the decoder path
+    * through the frame machinery is identical. Four lanes: a minimal frame
     * (header checksum only — a Scala-side constant since the
     * descriptor is constant) SANDWICHED between two skippable frames
     * (the 0x184D2A5X metadata escape, skipped as lz4(1) does); a
@@ -4296,15 +4296,14 @@ $steps,
              CASE WHEN doc_id % 4 <= 1 THEN TRUE END AS roundtrip
       FROM documents ORDER BY doc_id"""))
 
-  /** In-engine ZSTANDARD source decode (functions/ZstdInflate — the
-    * FULL RFC 8878 decoder: FSE, Huffman, sequences, repeat offsets —
-    * pinned against zstd(1) CLI frames, zstd-jni, and aircompressor in
-    * ZstdInflateSpec; zstd is the dominant compression for modern
-    * training shards). The query constructs frames in pure column
-    * space using the two block shapes SQL can assemble — a RAW block
-    * and an RLE block (the entropy-coded paths are exercised by the
-    * three-implementation spec differential; the frame machinery here
-    * is identical) — with the Content_Checksum (LOW 4 BYTES of XXH64,
+  /** In-engine ZSTANDARD source decode (functions/ZstdInflate over
+    * zstd-jni; zstd(1) CLI frames, zstd-jni and aircompressor output are
+    * pinned in ZstdInflateSpec; zstd is the dominant compression for
+    * modern training shards). The query constructs frames in pure
+    * column space using the two block shapes SQL can assemble — a RAW
+    * block and an RLE block (the entropy-coded paths are exercised by
+    * the spec's encoder round-trips; the frame machinery here is
+    * identical) — with the Content_Checksum (LOW 4 BYTES of XXH64,
     * via [[graft.functions.Checksums.xxh64_fn]]) VERIFIED on the
     * checksummed lane. Six lanes by doc_id % 6: (0) minimal
     * single-segment frame, 4-byte declared content size + one RAW
@@ -4443,8 +4442,8 @@ $steps,
     * dict-history path and the oracle predicts it with blob slicing.
     * Short docs fall back to a constant dictionary (the bound is
     * explicit on both sides). Trained-dictionary frames (entropy
-    * tables, id discipline, wrong-dict NULL) are pinned against
-    * zstd-jni (libzstd) in ZstdInflateSpec. Lanes by doc_id % 3:
+    * tables, id discipline, wrong-dict NULL) are pinned in
+    * ZstdInflateSpec. Lanes by doc_id % 3:
     * (0) text-as-dictionary decode; (1) the same frame with an EMPTY
     * dictionary — history unreachable → NULL; (2) raw text → NULL.
     */
@@ -4488,9 +4487,9 @@ $steps,
              END AS tail_hex
       FROM documents ORDER BY doc_id"""))
 
-  /** In-engine XZ source decode (functions/XzInflate — full xz format
-    * with the LZMA2 filter: range coder, all four check types, index/
-    * footer cross-checks) — the second Wikipedia-dump codec beside
+  /** In-engine XZ source decode (functions/XzInflate over xz-java —
+    * the xz format with the lone LZMA2 filter, all four check types,
+    * index/footer cross-checks) — the second Wikipedia-dump codec beside
     * llm_source_bz2. Unlike bzip2, LZMA2 HAS a stored mode
     * (uncompressed chunks), so this lane carries VARIABLE document
     * text through a fully column-built stream ([[xzStreamStaged]]):
@@ -4499,8 +4498,8 @@ $steps,
     * zstRawBlocksHex discipline, single-chunk fast path), then index
     * varints, padding, and footer — every CRC computed in column
     * space, validated byte-for-byte against CPython lzma during
-    * construction. The entropy-coded paths are pinned three ways in
-    * XzInflateSpec (xz CLI, xz-java, CPython). Empty text has no chunk
+    * construction. Entropy-coded streams from the xz CLI, xz-java and
+    * CPython are pinned in XzInflateSpec. Empty text has no chunk
     * to carry — explicit NULL on both sides. Lanes by doc_id % 3:
     * (0) valid stream → text round-trips; (1) content-check CRC
     * flipped → NULL; (2) raw text → NULL.

@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * incompressible random frame that stores UNCOMPRESSED blocks) and
   * in-JVM lz4-java (LZ4FrameOutputStream round-trips across payload
   * shapes and block sizes; its XXHash32 also pins Checksums.xxh32
-  * value-for-value). NULL contract: bad magic/version, the DictID
-  * out-of-scope bit, a flipped header checksum, a flipped block
+  * value-for-value). Linked-block frames, which lz4-java cannot write,
+  * come from `lz4 -BD` and a hand-built frame. NULL contract: bad
+  * magic/version, the DictID out-of-scope bit, a flipped header checksum, a flipped block
   * checksum, a flipped content checksum, a flipped payload byte under
-  * stale checksums, truncation, trailing bytes, raw text.
+  * stale checksums, a content size past 2^63, truncation, trailing
+  * bytes, raw text.
   */
 class Lz4InflateSpec extends SparkSpec {
   import spark.implicits._
@@ -90,9 +92,16 @@ class Lz4InflateSpec extends SparkSpec {
     val badBlockCk = { val c = bx.clone()
       c(c.length - 9) = (c(c.length - 9) ^ 1).toByte; c }
     val raw = "not an lz4 frame".getBytes("UTF-8")
+    // content size (LE u64 at bytes 6..13) with bit 63 set, under a
+    // recomputed header checksum, so only the size lies
+    val xx = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash32()
+    val hugeSize = mut { b =>
+      b(13) = (b(13) | 0x80).toByte
+      b(14) = ((xx.hash(b, 4, 10, 0) >> 8) & 0xff).toByte
+    }
     assert(unlz4(badMagic, badVersion, dictBit, badHc, badContentCk,
-      bitRot, truncated, trailing, badBlockCk, raw, Array.empty[Byte]) ==
-      Seq.fill(11)(None))
+      bitRot, truncated, trailing, badBlockCk, raw, Array.empty[Byte],
+      hugeSize) == Seq.fill(12)(None))
   }
 
   test("skippable frames + frame concatenation: the lz4(1) sequence walk") {
@@ -116,6 +125,37 @@ class Lz4InflateSpec extends SparkSpec {
     // inter-frame garbage (a stray byte between frames) NULLs all
     val garbage = onlySkip ++ Array[Byte](0x7f) ++ res("lzbig.hex")
     assert(unlz4(truncPay, truncHdr, garbage) == Seq.fill(3)(None))
+  }
+
+  test("linked-block frames: matches reach back into earlier blocks") {
+    val xx = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash32()
+    def le32(v: Long): Array[Byte] =
+      Array(v, v >> 8, v >> 16, v >> 24).map(_.toByte)
+    // FLG 0x44: version 01, independence bit CLEAR, content checksum
+    val desc = Array[Byte](0x44, 0x40)
+    val hc = ((xx.hash(desc, 0, 2, 0) >> 8) & 0xff).toByte
+    // block 1: 16 literals; block 2: a 16-byte match at offset 16 — the
+    // whole of block 1 — then the literals "12345"
+    val b1 = Array[Byte](0xf0.toByte, 0x01) ++ "abcdefghijklmnop".getBytes
+    val b2 = Array[Byte](0x0c, 0x10, 0x00, 0x50) ++ "12345".getBytes
+    val content = ("abcdefghijklmnop" * 2 + "12345").getBytes
+    val frame = le32(0x184d2204L) ++ desc ++ Array(hc) ++
+      le32(b1.length) ++ b1 ++ le32(b2.length) ++ b2 ++ le32(0) ++
+      le32(xx.hash(content, 0, content.length, 0))
+    val got = Lz4Inflate.unlz4(frame)
+    assert(got != null && java.util.Arrays.equals(got, content))
+    // the same blocks under FLG 0x64 (independent) must NULL: block 2's
+    // match would leave its own block
+    val indepDesc = Array[Byte](0x64, 0x40)
+    val indep = frame.clone()
+    indep(4) = 0x64
+    indep(6) = ((xx.hash(indepDesc, 0, 2, 0) >> 8) & 0xff).toByte
+    assert(Lz4Inflate.unlz4(indep) == null)
+    // lzlinked.hex: `lz4 -BD -B4 --content-size` over a 1 KiB random
+    // text repeated 66 times, so the second 64 KB block is matches into
+    // the first
+    assert(unlz4(res("lzlinked.hex")) ==
+      Seq(Some((67584, "5c7887583c0807252bc9aa8e0b3db106"))))
   }
 
   test("null input yields NULL; SQL surface registered") {

@@ -151,6 +151,20 @@ class XzInflateSpec extends SparkSpec {
     assert(inflate(bos.toByteArray).head.isEmpty)
   }
 
+  test("a declared dictionary past the cap NULLs without allocating it") {
+    // Cli64 (xz -9) with its LZMA2 dictionary byte raised from 0x1C
+    // (64 MiB) to 0x1E (128 MiB) and the block-header CRC32 recomputed:
+    // the stream is otherwise intact, so only the memory limit rejects it
+    val big = unhex(Cli64)
+    assert(big(16) == 0x1c)
+    big(16) = 0x1e
+    val crc = new java.util.zip.CRC32()
+    crc.update(big, 12, 8)
+    val v = crc.getValue
+    (0 until 4).foreach(i => big(20 + i) = (v >>> (8 * i)).toByte)
+    assert(inflate(big).head.isEmpty)
+  }
+
   test("stream padding between concatenated streams") {
     val one = unhex(Cli32)
     val padded = one ++ Array.fill(8)(0.toByte) ++ one

@@ -196,6 +196,22 @@ class ZstdInflateSpec extends SparkSpec {
     assert(out.forall(_ == null))
   }
 
+  test("window bound: a frame asking for a 128 MiB window NULLs") {
+    // a streaming encoder with no pledged size keeps its full window:
+    // the header declares 2^27 bytes however small the payload is
+    val payload = ("window " * 257).take(1800).getBytes("UTF-8")
+    val bos = new java.io.ByteArrayOutputStream()
+    val zo = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(bos)
+    try { zo.setLong(27); zo.write(payload) } finally zo.close()
+    val blob = bos.toByteArray
+    // libzstd under its own defaults decodes it, sizing a 128 MiB window
+    val zi = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
+      new java.io.ByteArrayInputStream(blob))
+    val plain = try zi.readAllBytes() finally zi.close()
+    assert(java.util.Arrays.equals(plain, payload))
+    assert(ZstdInflate.unzstd(blob) == null)
+  }
+
   test("dictionary frames: zstd-jni trained dict round-trips; wrong, " +
     "missing, and id-mismatched dicts NULL; empty dict is neutral") {
     // small structured records — the shard shape dictionaries exist for
