@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,74 +12,86 @@ import org.apache.spark.sql.types._
   * filter to the base queries where queries.sql has none.
   */
 object Dashboard {
+  import WalmartWorkload.productAttrs
+
   private val Money = DecimalType(12, 2)
+
+  /** The fact joined to the selected year's dates: every panel's input. */
+  private def salesIn(w: WalmartStar, year: Int): DataFrame =
+    w.sales.join(broadcast(w.date.filter(col("year") === year)), Seq("date_id"))
+
+  /** A panel's presentation order. Every panel's result is bounded by
+    * dimension cardinalities, not by fact size (at most 420 rows:
+    * category × occupation), so the rows go to one partition and are
+    * sorted there. A global `orderBy` would add a range-partitioning
+    * exchange: a sampling job plus a shuffle. `repartition(1)` keeps the
+    * final aggregate parallel and moves only the bounded result rows,
+    * where `coalesce(1)` would pull that aggregate into one task.
+    */
+  private def presented(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(1).sortWithinPartitions(keys: _*)
 
   /** dashboard.py:54-78 — top products per (month, weekend) for the year. */
   def topProducts(w: WalmartStar, year: Int): DataFrame =
-    WalmartWorkload.q11TopProductsPerCell(w, year)
+    presented(WalmartWorkload.q11Cells(w, year),
+      col("month_num"), col("is_weekend"), col("rn"))
 
   /** dashboard.py:98-108 — demographics, year-scoped. */
   def demographics(w: WalmartStar, year: Int): DataFrame =
-    w.sales
-      .join(broadcast(w.date.filter(col("year") === year)), Seq("date_id"))
+    presented(salesIn(w, year)
       .join(broadcast(w.customer), Seq("customer_id"))
       .groupBy("gender", "age_group", "city_category")
       .agg(sum("sales_amount").cast(Money).as("total_revenue"),
-        sum("quantity").as("units_sold"))
-      .orderBy("city_category", "gender", "age_group")
+        sum("quantity").as("units_sold")),
+      col("city_category"), col("gender"), col("age_group"))
 
   /** dashboard.py:126-135 — category × occupation, year-scoped. */
   def categoryByOccupation(w: WalmartStar, year: Int): DataFrame =
-    w.sales
-      .join(broadcast(w.date.filter(col("year") === year)), Seq("date_id"))
-      .join(broadcast(w.product.drop("supplier_id", "store_id")), Seq("product_id"))
+    presented(salesIn(w, year)
+      .join(productAttrs(w), Seq("product_id"))
       .join(broadcast(w.customer), Seq("customer_id"))
       .groupBy("product_category", "occupation")
       .agg(sum("sales_amount").cast(Money).as("total_revenue"),
-        sum("quantity").as("units_sold"))
-      .orderBy(col("product_category"), col("total_revenue").desc,
-        col("occupation"))
+        sum("quantity").as("units_sold")),
+      col("product_category"), col("total_revenue").desc, col("occupation"))
 
   /** dashboard.py:153-165 — quarterly trend for the selected year. */
   def quarterlyTrend(w: WalmartStar, year: Int): DataFrame =
-    w.sales
-      .join(broadcast(w.date.filter(col("year") === year)), Seq("date_id"))
+    presented(salesIn(w, year)
       .join(broadcast(w.customer), Seq("customer_id"))
       .groupBy("quarter_num", "gender", "age_group")
       .agg(sum("sales_amount").cast(Money).as("total_revenue"),
-        sum("quantity").as("units_sold"))
-      .orderBy("quarter_num", "gender", "age_group")
+        sum("quantity").as("units_sold")),
+      col("quarter_num"), col("gender"), col("age_group"))
 
   /** dashboard.py:190-209 — top city categories per product category. */
   def topCities(w: WalmartStar, year: Int): DataFrame = {
-    val cityRev = w.sales
-      .join(broadcast(w.date.filter(col("year") === year)), Seq("date_id"))
+    val cityRev = salesIn(w, year)
       .join(broadcast(w.customer), Seq("customer_id"))
-      .join(broadcast(w.product.drop("supplier_id", "store_id")), Seq("product_id"))
+      .join(productAttrs(w), Seq("product_id"))
       .groupBy("city_category", "product_category")
       .agg(sum("sales_amount").cast(Money).as("total_revenue"))
     val rn = Window.partitionBy(col("product_category"))
       .orderBy(col("total_revenue").desc, col("city_category"))
-    cityRev.withColumn("rn", row_number().over(rn))
-      .filter(col("rn") <= 5)
-      .orderBy("product_category", "rn")
+    presented(cityRev.withColumn("rn", row_number().over(rn))
+      .filter(col("rn") <= 5),
+      col("product_category"), col("rn"))
   }
 
   /** dashboard.py:228-252 — monthly growth per category for the year. */
   def monthlyGrowth(w: WalmartStar, year: Int): DataFrame = {
-    val monthly = w.sales
-      .join(broadcast(w.date.filter(col("year") === year)), Seq("date_id"))
-      .join(broadcast(w.product.drop("supplier_id", "store_id")), Seq("product_id"))
+    val monthly = salesIn(w, year)
+      .join(productAttrs(w), Seq("product_id"))
       .groupBy("product_category", "month_num")
       .agg(sum("sales_amount").cast(Money).as("revenue"))
     val win = Window.partitionBy(col("product_category")).orderBy(col("month_num"))
-    monthly
+    presented(monthly
       .withColumn("prev_revenue", lag(col("revenue"), 1).over(win))
       .withColumn("growth_percent",
         round((col("revenue").cast(DoubleType) - col("prev_revenue").cast(DoubleType))
           / when(col("prev_revenue").cast(DoubleType) === 0.0, lit(null))
-            .otherwise(col("prev_revenue").cast(DoubleType)) * 100, 2))
-      .orderBy("product_category", "month_num")
+            .otherwise(col("prev_revenue").cast(DoubleType)) * 100, 2)),
+      col("product_category"), col("month_num"))
   }
 
   // --- Oracled twins on the TESTDATA star -------------------------------

@@ -31,9 +31,13 @@ object WalmartWorkload {
   private def growth(rev: Column, prev: Column): Column =
     round((rev - prev) / when(prev === 0, lit(null)).otherwise(prev) * 100, 2)
 
+  /** Product attributes without the supplier/store ids the fact carries. */
+  private[queries] def productAttrs(w: WalmartStar): DataFrame =
+    broadcast(w.product.drop("supplier_id", "store_id"))
+
   private def joinDims(w: WalmartStar, dims: String*): DataFrame =
     dims.foldLeft(w.sales) {
-      case (df, "product")  => df.join(broadcast(w.product.drop("supplier_id", "store_id")), Seq("product_id"))
+      case (df, "product")  => df.join(productAttrs(w), Seq("product_id"))
       case (df, "customer") => df.join(broadcast(w.customer), Seq("customer_id"))
       case (df, "date")     => df.join(broadcast(w.date), Seq("date_id"))
       case (df, "store")    => df.join(broadcast(w.store), Seq("store_id"))
@@ -161,7 +165,13 @@ object WalmartWorkload {
   }
 
   /** Q11 (queries.sql:137-154): top-5 products per (month, weekend) cell. */
-  def q11TopProductsPerCell(w: WalmartStar, year: Int): DataFrame = {
+  def q11TopProductsPerCell(w: WalmartStar, year: Int): DataFrame =
+    q11Cells(w, year).orderBy("month_num", "is_weekend", "rn")
+
+  /** Q11's ranked cells without the presentation order, for callers that
+    * sort the bounded result themselves (Dashboard.topProducts).
+    */
+  private[queries] def q11Cells(w: WalmartStar, year: Int): DataFrame = {
     val base = joinDims(w, "product", "date")
       .filter(col("year") === year)
       .groupBy("product_id", "product_category", "month_num", "is_weekend")
@@ -170,7 +180,6 @@ object WalmartWorkload {
       .orderBy(col("revenue").desc, col("product_id"))
     base.withColumn("rn", row_number().over(rn))
       .filter(col("rn") <= 5)
-      .orderBy("month_num", "is_weekend", "rn")
   }
 
   /** Q12 (queries.sql:159-171): quarterly revenue growth per store. */

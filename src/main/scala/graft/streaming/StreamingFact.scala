@@ -46,6 +46,18 @@ object StreamingFact {
     * batch on replay; overwrite-by-batch-id makes replays idempotent, the
     * file-sink equivalent of the reference's commit cadence
     * (hybridjoin.py:460-464) with strictly stronger semantics.
+    *
+    * One parquet file per micro-batch: `batch_id=N` holds exactly one
+    * `part-*.parquet` however many input splits the CSV scan cut the batch
+    * into. Every reader of the growing fact pays per file — a listing
+    * entry, footer read and scan task each — so a live dashboard refresh
+    * scans one file per batch instead of one per split. The file stays
+    * bounded because the batch is: `maxFilesPerTrigger` (the HYBRIDJOIN
+    * `w`) caps the input files one batch takes, so callers with very large
+    * input files narrow `w`. `repartition(1)`, not `coalesce(1)`: the CSV
+    * parse, normalization and joins stay parallel over the batch's splits
+    * and only the joined rows move to the one writer task, where
+    * `coalesce(1)` would run the whole batch in that task.
     */
   def runCsvToParquet(spark: SparkSession, sourceDir: String,
       sourceSchema: StructType, customerDim: DataFrame, productDim: DataFrame,
@@ -60,7 +72,8 @@ object StreamingFact {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outPath/batch_id=$id")
+        batch.repartition(1).write.mode("overwrite")
+          .parquet(s"$outPath/batch_id=$id")
       }
       .start()
   }

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.etl.{Dimensions, FactBuilder, Normalize}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end reference parity: master CSVs (FIXTURES.md §B shapes) →
@@ -146,6 +148,57 @@ class WalmartEndToEndSpec extends SparkSpec {
     }
     // year scoping: 2019 has no fixture data -> all panels empty
     assert(Dashboard.demographics(star, 2019).isEmpty)
+  }
+
+  /** Each panel's presentation keys, `true` where the panel sorts desc. */
+  private val panelOrder: Map[String, Seq[(String, Boolean)]] = Map(
+    "top_products" -> Seq("month_num" -> false, "is_weekend" -> false, "rn" -> false),
+    "demographics" -> Seq("city_category" -> false, "gender" -> false,
+      "age_group" -> false),
+    "category_by_occupation" -> Seq("product_category" -> false,
+      "total_revenue" -> true, "occupation" -> false),
+    "quarterly_trend" -> Seq("quarter_num" -> false, "gender" -> false,
+      "age_group" -> false),
+    "top_cities" -> Seq("product_category" -> false, "rn" -> false),
+    "monthly_growth" -> Seq("product_category" -> false, "month_num" -> false))
+
+  /** Row order by the given keys; the panels' keys are never null here
+    * (the inner dimension joins drop unknown keys).
+    */
+  private def rowOrdering(keys: Seq[(String, Boolean)]): Ordering[Row] =
+    (a, b) => keys.iterator.map { case (k, desc) =>
+      val c = a.getAs[Comparable[AnyRef]](k).compareTo(b.getAs[AnyRef](k))
+      if (desc) -c else c
+    }.find(_ != 0).getOrElse(0)
+
+  test("dashboard panels: rows come in each panel's presentation order") {
+    // a fact spread over many partitions, so rows reach the final sort
+    // from several shuffle blocks
+    val spread = star.copy(sales = star.sales.repartition(7))
+    assert(panelOrder.keySet == Dashboard.allPanels(spread, 2017).keySet)
+    for (year <- Seq(2017, 2018);
+         (name, df) <- Dashboard.allPanels(spread, year)) {
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, s"panel $name empty for $year")
+      assert(rows == rows.sorted(rowOrdering(panelOrder(name))),
+        s"panel $name for $year is out of order:\n${rows.mkString("\n")}")
+    }
+  }
+
+  test("dashboard panels: no range-partitioning exchange (no sampling job)") {
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    def in(df: DataFrame) = noAqe.createDataFrame(df.collectAsList(), df.schema)
+    val s = WalmartStar(in(star.sales), in(star.customer), in(star.product),
+      in(star.store), in(star.supplier), in(star.date))
+    Dashboard.allPanels(s, 2017).foreach { case (name, df) =>
+      val ranged = df.queryExecution.executedPlan.collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranged.isEmpty, s"panel $name plans a range exchange:\n" +
+        df.queryExecution.executedPlan)
+    }
   }
 
   test("default-fill: unknown product gets price 0, supplier 1, store 1") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.etl.{Dimensions, FactBuilder, Normalize}
 import org.apache.spark.sql.functions._
@@ -60,6 +61,70 @@ class CsvStreamE2ESpec extends SparkSpec {
       customers, products, out, ckpt, maxFilesPerTrigger = 1)
     q2.awaitTermination()
     assert(spark.read.parquet(out).count() == 4)
+  }
+
+  test("one parquet file per micro-batch, however many splits the batch scans") {
+    // a cloned session whose scan cuts every ~170-byte CSV file into
+    // 128-byte splits, so a micro-batch of three files reads several
+    // input partitions
+    val split = spark.newSession()
+    split.conf.set("spark.sql.files.maxPartitionBytes", "128")
+    split.conf.set("spark.sql.files.openCostInBytes", "128")
+    val dir = Files.createTempDirectory("graft_stream_split_src").toString
+    val out = Files.createTempDirectory("graft_stream_split_out").toString + "/fact"
+    val ckpt = Files.createTempDirectory("graft_stream_split_ckpt").toString
+    val dates = Seq("2020-01-02", "03-02-2020", "04/05/2020", "2020/06/07")
+    val files = (0 until 6).map { f =>
+      val rows = (0 until 5).map { i =>
+        val n = f * 5 + i
+        // every 7th row has an unknown customer, every 4th an unknown product
+        val cust = if (n % 7 == 6) 9999 else 1001 + n % 3
+        val prod = if (n % 4 == 3) "PX" else s"P${1 + n % 2}"
+        s"$n,$cust,$prod,${1 + n % 3},${dates(n % 4)}"
+      }
+      val path = java.nio.file.Paths.get(s"$dir/part$f.csv")
+      Files.writeString(path,
+        ("orderID,Customer_ID,Product_ID,quantity,date" +: rows).mkString("", "\n", "\n"))
+      path.toString
+    }
+    def csv(s: org.apache.spark.sql.SparkSession, paths: String*) =
+      s.read.schema(txSchema).option("header", "true").csv(paths: _*)
+    assert(csv(split, files.take(3): _*).rdd.getNumPartitions > 1,
+      "sanity: a three-file batch must span several input splits")
+
+    val customerRows = Seq(Tuple1(1001), Tuple1(1002), Tuple1(1003))
+    val productRows = Seq(("P1", BigDecimal("2.50"), 9, 3),
+      ("P2", BigDecimal("10.00"), 13, 5))
+    def dims(s: org.apache.spark.sql.SparkSession) = (
+      s.createDataFrame(customerRows).toDF("customer_id"),
+      s.createDataFrame(productRows)
+        .toDF("product_id", "price", "supplier_id", "store_id")
+        .withColumn("price", col("price").cast("decimal(12,2)")))
+
+    val (customers, products) = dims(split)
+    val q = StreamingFact.runCsvToParquet(split, dir, txSchema,
+      customers, products, out, ckpt, maxFilesPerTrigger = 3)
+    q.awaitTermination()
+    assert(q.exception.isEmpty)
+
+    def names(d: java.nio.file.Path) =
+      Files.list(d).iterator().asScala.map(_.getFileName.toString).toSeq
+    val batchDirs = names(java.nio.file.Paths.get(out))
+      .filter(_.startsWith("batch_id="))
+    assert(batchDirs.size == 2) // six files, three per trigger
+    batchDirs.foreach { b =>
+      val parts = names(java.nio.file.Paths.get(out, b))
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.size == 1, s"$b holds ${parts.mkString(", ")}")
+    }
+
+    val (batchCustomers, batchProducts) = dims(spark)
+    val expected = FactBuilder.buildFact(
+      Normalize.normalizeTransactions(csv(spark, dir)),
+      batchCustomers, batchProducts)
+    val fact = spark.read.parquet(out).drop("batch_id")
+    assert(fact.count() == expected.count() && expected.count() > 0)
+    assert(graft.GoldenHash.tableHash(fact) == graft.GoldenHash.tableHash(expected))
   }
 
   test("readMasterCsv drops the pandas index column and keeps quoted fields") {
