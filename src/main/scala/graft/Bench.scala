@@ -3,6 +3,7 @@ package graft
 import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
@@ -135,7 +136,7 @@ object Bench {
           val t0 = System.nanoTime()
           df.write.format("noop").mode("overwrite").save()
           Some(name -> ((System.nanoTime() - t0) / 1e9))
-        } catch { case scala.util.control.NonFatal(_) => None }
+        } catch { case NonFatal(_) => None }
       val full = Tables.All.flatMap { t =>
         lapCold(t, if (t == "events") Tables.events(spark, sfDir)
           else Tables.load(spark, sfDir, t))
@@ -366,7 +367,12 @@ object Bench {
       execOrder.filter(q => revisitNames(q._1)).map { case (name, fn) =>
         val extra =
           try Seq(lap(() => fn(spark, sfDir)), lap(() => fn(spark, sfDir)))
-          catch { case _: Throwable => Seq.empty[Lap] }
+          catch {
+            case NonFatal(e) =>
+              System.err.println(
+                s"[bench] revisit $name FAILED: ${e.getMessage}")
+              Seq.empty[Lap]
+          }
         name -> extra
       }.toMap
     val finalResults: Seq[(String, Double, Seq[Lap])] =
@@ -428,7 +434,12 @@ object Bench {
           val best =
             try math.min(lap(() => fnByName(name)(spark, sfDir)).sec,
               lap(() => fnByName(name)(spark, sfDir)).sec)
-            catch { case _: Throwable => v }
+            catch {
+              case NonFatal(e) =>
+                System.err.println(
+                  s"[bench] requiet $name FAILED: ${e.getMessage}")
+                v
+            }
           name -> math.min(v, best)
         }.toMap
       }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.llm.Similarity
 
 /** Streaming steady-state of the IVF-ANN index's inverted-list
@@ -28,14 +27,13 @@ import graft.llm.Similarity
   */
 object StreamingAnnIvf {
 
-  final class Maintainer(centArr: Array[(Long, Array[Double])]) {
+  /** [[current]] holds (cells, inverted lists), published together. */
+  final class Maintainer(centArr: Array[(Long, Array[Double])])
+      extends Fold[(DataFrame, DataFrame)] {
     require(centArr.nonEmpty, "centroid table must be non-empty")
 
-    @volatile private var state: Option[DataFrame] = None
-    @volatile private var lists: Option[DataFrame] = None
-
     /** (centroid_id, n_vectors, first_vec) per occupied cell. */
-    def currentCells: Option[DataFrame] = state
+    def currentCells: Option[DataFrame] = current.map(_._1)
 
     /** The accumulated INVERTED LISTS (centroid_id, neighbor_id, cv) —
       * the index itself, O(corpus) rows held as a localCheckpoint'd
@@ -47,35 +45,27 @@ object StreamingAnnIvf {
       * (`stream_ann_recall_ivf` shares llm_ann_recall_ivf's oracle
       * verbatim; StreamingAnnIvfSpec pins the fold).
       */
-    def currentLists: Option[DataFrame] = lists
+    def currentLists: Option[DataFrame] = current.map(_._2)
 
-    def absorb(batch: DataFrame): Unit = synchronized {
+    def absorb(batch: DataFrame): Unit = advance { prior =>
       val assigned = Similarity.ivfAssign(batch, centArr)
         .localCheckpoint(true)
-      lists = Some(lists match {
+      val lists = prior match {
         case None => assigned
-        case Some(ls) => ls.unionByName(assigned).localCheckpoint(true)
-      })
+        case Some((_, ls)) => ls.unionByName(assigned).localCheckpoint(true)
+      }
       val b = assigned
         .groupBy("centroid_id")
         .agg(count(lit(1)).as("n_vectors"),
           min(col("neighbor_id")).as("first_vec"))
-      val next = state match {
+      val next = prior match {
         case None => b
-        case Some(st) => st.unionByName(b)
+        case Some((st, _)) => st.unionByName(b)
           .groupBy("centroid_id")
           .agg(sum(col("n_vectors")).as("n_vectors"),
             min(col("first_vec")).as("first_vec"))
       }
-      state = Some(next.localCheckpoint(true))
+      (next.localCheckpoint(true), lists)
     }
-
-    def run(embeddings: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      embeddings.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorb(b.toDF()))
-        .start()
   }
 }

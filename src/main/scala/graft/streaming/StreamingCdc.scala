@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
 import graft.operators.CdcMerge
 
 /** Streaming steady-state of the CDC merge (operators.CdcMerge): a
@@ -23,39 +22,19 @@ import graft.operators.CdcMerge
   */
 object StreamingCdc {
 
-  /** Accumulates micro-batches into a compacted table. Thread-safe: the
-    * streaming engine invokes foreachBatch serially, but `current` may
-    * race a reader.
+  /** Accumulates micro-batches into a compacted table: [[current]] is
+    * the compacted table so far (tombstones retained), if any batch has
+    * arrived.
     */
-  final class Compactor(keyCols: Seq[String], orderCols: Seq[String]) {
-    @volatile private var state: Option[DataFrame] = None
+  final class Compactor(keyCols: Seq[String], orderCols: Seq[String])
+      extends Fold[DataFrame] {
 
-    /** The compacted table so far (tombstones retained), if any batch
-      * has arrived.
-      */
-    def current: Option[DataFrame] = state
-
-    def absorb(batch: DataFrame): Unit = synchronized {
-      val next = state match {
+    def absorb(batch: DataFrame): Unit = advance { prior =>
+      val next = prior match {
         case None => CdcMerge.compact(batch, keyCols, orderCols)
         case Some(base) => CdcMerge.merge(base, batch, keyCols, orderCols)
       }
-      state = Some(next.localCheckpoint(true))
+      next.localCheckpoint(true)
     }
-
-    /** Attach to a changelog stream; each micro-batch folds into the
-      * compacted state. Defaults to Trigger.AvailableNow (drain the
-      * backlog and stop — the finite-drain analog StreamBench uses);
-      * pass a processing-time trigger for a long-running query whose
-      * batch boundaries the caller controls (how StreamingCdcSpec
-      * forces three uneven batches deterministically).
-      */
-    def run(changeStream: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      changeStream.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorb(b.toDF()))
-        .start()
   }
 }

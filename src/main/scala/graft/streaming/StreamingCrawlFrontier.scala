@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming steady-state of crawl-frontier dedup by CANONICAL URL —
   * the live form of llm_crawl_dedup's batch groupBy (normalize →
@@ -26,44 +25,33 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingCrawlFrontier {
 
-  final class Maintainer {
-
-    @volatile private var state: Option[DataFrame] = None
+  final class Maintainer extends Fold[DataFrame] {
 
     /** The held frontier — (url, n_docs, first_doc), one row per
       * distinct canonical URL seen; None before the first batch.
       */
-    def currentFrontier: Option[DataFrame] = state
+    def currentFrontier: Option[DataFrame] = current
 
     /** Absorb a discovery batch of (doc_id, url) rows and return the
       * batch's NEWLY SEEN canonical URLs (the rows a crawl scheduler
       * would enqueue this cycle): batch-distinct anti-joined against
       * the pre-absorb state.
       */
-    def absorb(batch: DataFrame): DataFrame = synchronized {
+    def absorb(batch: DataFrame): DataFrame = advanceWith { prior =>
       val b = batch.groupBy(col("url"))
         .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
         .localCheckpoint(true)
-      val fresh = state match {
+      val fresh = prior match {
         case None => b
         case Some(s) => b.join(s.select(col("url")), Seq("url"), "left_anti")
       }
-      val next = state match {
+      val next = prior match {
         case None => b
         case Some(s) => s.union(b).groupBy(col("url"))
           .agg(sum(col("n_docs")).as("n_docs"),
             min(col("first_doc")).as("first_doc"))
       }
-      state = Some(next.localCheckpoint(true))
-      fresh
+      (next.localCheckpoint(true), fresh)
     }
-
-    def run(urls: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      urls.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => { absorb(b.toDF()); () })
-        .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Live distribution-drift monitor — the streaming composition of the
@@ -26,7 +25,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 object StreamingDrift {
 
   final class Monitor(valueCol: String, mn: Long, mx: Long, buckets: Int,
-      reference: DataFrame) {
+      reference: DataFrame)
+      extends StreamingHistogram.Maintainer(valueCol, mn, mx, buckets) {
     // materialize the reference ONCE (it is ≤ B rows) — and validate the
     // layout contract early: a bucket id outside [0, B) means the
     // reference was built under a different layout
@@ -35,18 +35,11 @@ object StreamingDrift {
       s"reference histogram has bucket ids outside [0, $buckets) — " +
         "built under a different layout?")
 
-    private val maint =
-      new StreamingHistogram.Maintainer(valueCol, mn, mx, buckets)
-
-    def absorb(batch: DataFrame): Unit = maint.absorb(batch)
-
-    def currentHistogram: Option[DataFrame] = maint.currentHistogram
-
     /** Per-bucket drift report against the reference: (bucket, ref_n,
       * obs_n, contrib, flagged) — buckets present on EITHER side appear
       * (full outer over two ≤ B-row frames), absent sides count 0.
       */
-    def driftReport(): Option[DataFrame] = maint.currentHistogram.map {
+    def driftReport(): Option[DataFrame] = currentHistogram.map {
       obs =>
         val o = obs.select(col("__b"), col("__c").as("obs_n"))
         val r = ref.select(col("__b"), col("__c").as("ref_n"))
@@ -70,9 +63,5 @@ object StreamingDrift {
             (col("contrib") > 3.84).as("flagged"))
           .orderBy("bucket")
     }
-
-    def run(events: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      maint.run(events, checkpoint, trigger)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming steady-state of EXACT heavy-hitter detection
   * (operators/HeavyHitters.exact): per-key counts maintained under an
@@ -30,37 +29,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingHeavyHitters {
 
-  final class Maintainer(keys: Seq[String]) {
+  final class Maintainer(keys: Seq[String]) extends Fold[DataFrame] {
     require(keys.nonEmpty, "heavy-hitter keys must be non-empty")
 
-    @volatile private var state: Option[DataFrame] = None
-
     /** The held per-key counts — one row per distinct key seen. */
-    def currentCounts: Option[DataFrame] = state
+    def currentCounts: Option[DataFrame] = current
 
-    def absorb(batch: DataFrame): Unit = synchronized {
+    def absorb(batch: DataFrame): Unit = advance { prior =>
       val b = batch.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("n_events"))
-      val next = state match {
+      val next = prior match {
         case None => b
         case Some(s) => s.union(b).groupBy(keys.map(col): _*)
           .agg(sum(col("n_events")).as("n_events"))
       }
-      state = Some(next.localCheckpoint(true))
+      next.localCheckpoint(true)
     }
 
     /** Threshold readout from held state; None before the first batch.
       * Same output shape as HeavyHitters.exact.
       */
     def heavyHitters(minCount: Long): Option[DataFrame] =
-      state.map(_.filter(col("n_events") >= minCount))
-
-    def run(events: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      events.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorb(b.toDF()))
-        .start()
+      current.map(_.filter(col("n_events") >= minCount))
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.HistogramQuantile
@@ -45,6 +44,21 @@ object StreamingHistogram {
   private def idiv(a: Column, b: Column): Column =
     call_function("div", a, b)
 
+  /** The declared layout's guards: a non-empty range, at least one
+    * bucket, and (r9 advice) (v - mn) * buckets within BIGINT — here the
+    * range is DECLARED, so the guard is a cheap construction-time require
+    * rather than the batch form's in-plan assert.
+    */
+  private def checkLayout(mn: Long, mx: Long, buckets: Int): Unit = {
+    require(buckets >= 1, s"buckets=$buckets must be >= 1")
+    require(mx >= mn, s"declared range [$mn, $mx] is empty")
+    require(java.lang.Long.compareUnsigned(mx - mn,
+        Long.MaxValue / buckets - 1) <= 0,
+      s"declared range [$mn, $mx] too wide: (mx - mn + 1) must be <= " +
+        s"Long.MaxValue/$buckets = ${Long.MaxValue / buckets} so the " +
+        s"bucket expression (v - mn) * $buckets stays within BIGINT")
+  }
+
   /** One batch's (__b, __c) bucket counts under the declared layout —
     * clamped at the edges, NULLs dropped. Shared by the maintainer's
     * fold and by reference-histogram construction
@@ -53,16 +67,7 @@ object StreamingHistogram {
     */
   def bucketCounts(df: DataFrame, valueCol: String, mn: Long, mx: Long,
       buckets: Int): DataFrame = {
-    require(buckets >= 1, s"buckets=$buckets must be >= 1")
-    require(mx >= mn, s"declared range [$mn, $mx] is empty")
-    // layout contract (r9 advice): (v - mn) * buckets must stay within
-    // BIGINT — here the range is DECLARED, so the guard is a cheap
-    // construction-time require rather than the batch form's in-plan assert
-    require(java.lang.Long.compareUnsigned(mx - mn,
-        Long.MaxValue / buckets - 1) <= 0,
-      s"declared range [$mn, $mx] too wide: (mx - mn + 1) must be <= " +
-        s"Long.MaxValue/$buckets = ${Long.MaxValue / buckets} so the " +
-        s"bucket expression (v - mn) * $buckets stays within BIGINT")
+    checkLayout(mn, mx, buckets)
     val v0 = col(valueCol).cast(LongType)
     // clamp to the declared layout: below-range → bucket 0,
     // above-range → bucket B−1; NULLs drop (they carry no value)
@@ -72,41 +77,33 @@ object StreamingHistogram {
       .groupBy("__b").agg(count(lit(1)).as("__c"))
   }
 
-  final class Maintainer(valueCol: String, mn: Long, mx: Long,
-      buckets: Int) {
-    require(buckets >= 1, s"buckets=$buckets must be >= 1")
-    require(mx >= mn, s"declared range [$mn, $mx] is empty")
-    // layout contract (r9 advice): (v - mn) * buckets must stay within
-    // BIGINT — here the range is DECLARED, so the guard is a cheap
-    // construction-time require rather than the batch form's in-plan assert
-    require(java.lang.Long.compareUnsigned(mx - mn,
-        Long.MaxValue / buckets - 1) <= 0,
-      s"declared range [$mn, $mx] too wide: (mx - mn + 1) must be <= " +
-        s"Long.MaxValue/$buckets = ${Long.MaxValue / buckets} so the " +
-        s"bucket expression (v - mn) * $buckets stays within BIGINT")
-
-    @volatile private var hist: Option[DataFrame] = None
+  /** Not final: [[StreamingDrift.Monitor]] is this maintainer plus a
+    * fixed reference histogram.
+    */
+  class Maintainer(valueCol: String, mn: Long, mx: Long, buckets: Int)
+      extends Fold[DataFrame] {
+    checkLayout(mn, mx, buckets)
 
     /** The held sketch state: (__b, __c) bucket counts — ≤ `buckets`
       * rows at any stream length.
       */
-    def currentHistogram: Option[DataFrame] = hist
+    def currentHistogram: Option[DataFrame] = current
 
-    def absorb(batch: DataFrame): Unit = synchronized {
+    def absorb(batch: DataFrame): Unit = advance { prior =>
       val b = bucketCounts(batch, valueCol, mn, mx, buckets)
-      val next = hist match {
+      val next = prior match {
         case None => b
         case Some(h) =>
           h.union(b).groupBy("__b").agg(sum(col("__c")).as("__c"))
       }
-      hist = Some(next.localCheckpoint(true))
+      next.localCheckpoint(true)
     }
 
     /** Percentile readout from held state: same output shape and same
       * estimate arithmetic as [[HistogramQuantile.percentiles]]. None
       * until the first batch is absorbed.
       */
-    def quantiles(pcts: Seq[Int]): Option[DataFrame] = hist.map { h =>
+    def quantiles(pcts: Seq[Int]): Option[DataFrame] = current.map { h =>
       require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
         s"pcts=$pcts must be percentages in 1..100")
       // the running-count window runs over the ≤ B-row held state —
@@ -119,13 +116,5 @@ object StreamingHistogram {
         .select(lit(mn).as("__mn"), lit(mx).as("__mx"), col("__n"))
       HistogramQuantile.estimateFrom(cum, stats, Nil, buckets, pcts)
     }
-
-    def run(events: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      events.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorb(b.toDF()))
-        .start()
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{Column, DataFrame}
 import graft.operators.{CdcMerge, JoinMv}
 
 /** Streaming steady-state of incremental JOIN-view maintenance
@@ -21,120 +20,91 @@ import graft.operators.{CdcMerge, JoinMv}
   *
   * Batches for the two sides arrive independently (two streams, or one
   * stream demultiplexed); [[Maintainer.absorbA]]/[[Maintainer.absorbB]]
-  * serialize on the maintainer, which is the same single-writer
-  * assumption every foreachBatch sink makes.
+  * are two steps of one [[Fold]] and serialize on its lock, which is the
+  * same single-writer assumption every foreachBatch sink makes.
   */
 object StreamingJoinMv {
 
+  /** [[current]] holds (A snapshot, B snapshot, view), each None until
+    * it exists, published together by every step.
+    */
   final class Maintainer(aKey: Seq[String], aOrd: Seq[String],
       aServing: Column, bKey: Seq[String], bOrd: Seq[String],
-      bServing: Column, joinCols: Seq[String]) {
-    @volatile private var aSnap: Option[DataFrame] = None
-    @volatile private var bSnap: Option[DataFrame] = None
-    @volatile private var view: Option[DataFrame] = None
+      bServing: Column, joinCols: Seq[String])
+      extends Fold[
+        (Option[DataFrame], Option[DataFrame], Option[DataFrame])] {
 
     /** The maintained join view (A's columns ++ B's non-join columns);
       * None until both sides have seen at least one batch.
       */
-    def currentView: Option[DataFrame] = view
+    def currentView: Option[DataFrame] = current.flatMap(_._3)
 
-    def currentA: Option[DataFrame] = aSnap
-    def currentB: Option[DataFrame] = bSnap
+    def currentA: Option[DataFrame] = current.flatMap(_._1)
+    def currentB: Option[DataFrame] = current.flatMap(_._2)
 
-    /** View fold against explicit side SNAPSHOT ARGUMENTS (the pre-merge
-      * base for the side that just advanced — JoinMv's contract). The
-      * PRE-MERGE bases are parameters, not reads of aSnap/bSnap: the
-      * earlier form temporarily swapped the @volatile field back to the
-      * pre-merge base around this call, so an exception mid-maintain left
-      * the field stale and a concurrent dashboard reader could observe an
-      * A snapshot inconsistent with the just-advanced view (r9 advice).
-      * The MERGED snapshots, by contrast, ARE intentionally read from the
-      * just-written @volatile fields (r16 — they are exactly the frames
-      * absorbA/absorbB checkpointed one line earlier, saving a second
-      * table-sized CdcMerge per batch); that read is safe ONLY because
-      * absorbA/absorbB write the field and call this method inside one
-      * synchronized block — rebuildOrMaintain must never be called from
-      * outside that lock, or the r9 inconsistency returns.
+    /** One side's compacted snapshot after `batch`. r17 note: a LAZY
+      * snapshot checkpoint here (materialized by the view fold) was A/B'd
+      * and REVERTED — measured neutral-to-worse (stream_join_mv 3.4–3.9 s
+      * eager vs 4.0–4.2 s lazy at sf0.1); the deferred final stage just
+      * moved into the view job's critical path.
       */
-    private def rebuildOrMaintain(aBase: Option[DataFrame],
-        bBase: Option[DataFrame], aBatch: Option[DataFrame],
-        bBatch: Option[DataFrame]): Unit = {
-      val empty: DataFrame => DataFrame = b => b.limit(0)
+    private def side(prior: Option[DataFrame], batch: DataFrame,
+        key: Seq[String], ord: Seq[String]): DataFrame =
+      (prior match {
+        case None => CdcMerge.compact(batch, key, ord)
+        case Some(base) => CdcMerge.merge(base, batch, key, ord)
+      }).localCheckpoint(true)
+
+    /** The view after one side advanced. `aBase`/`bBase` are the
+      * PRE-merge snapshots JoinMv folds against (the advanced side's
+      * merged snapshot when that side was empty before); `a`/`b` are
+      * the merged snapshots, passed as JoinMv's current side tables so
+      * maintain() does not rerun the table-sized CdcMerge a second time
+      * per batch (r16). The untouched side's snapshot IS its merge with
+      * an empty batch (anti join of nothing, recompact of nothing).
+      */
+    private def nextView(view: Option[DataFrame], aBase: Option[DataFrame],
+        bBase: Option[DataFrame], a: Option[DataFrame],
+        b: Option[DataFrame], aBatch: Option[DataFrame],
+        bBatch: Option[DataFrame]): Option[DataFrame] = {
+      val empty: DataFrame => DataFrame = df => df.limit(0)
       (aBase, bBase) match {
-        case (Some(a), Some(b)) =>
+        case (Some(a0), Some(b0)) =>
           val v = view match {
             case Some(v0) =>
-              // r16: pass the just-checkpointed merged snapshots as the
-              // current side tables — maintain() would otherwise rerun
-              // the table-sized CdcMerge a second time per batch. The
-              // untouched side's snapshot IS its merge with an empty
-              // batch (anti join of nothing, recompact of nothing).
               JoinMv.maintainMerged(v0,
-                a, aSnap.get, aBatch.getOrElse(empty(a)), aKey, aServing,
-                b, bSnap.get, bBatch.getOrElse(empty(b)), bKey, bServing,
+                a0, a.get, aBatch.getOrElse(empty(a0)), aKey, aServing,
+                b0, b.get, bBatch.getOrElse(empty(b0)), bKey, bServing,
                 joinCols)
             case None =>
               // first moment both sides exist: from-scratch join of the
               // compacted snapshots (MV creation) — batches already
-              // merged into them below
-              a.filter(aServing).join(b.filter(bServing), joinCols)
+              // merged into them
+              a0.filter(aServing).join(b0.filter(bServing), joinCols)
           }
-          view = Some(v.localCheckpoint(true))
-        case _ => () // one side still empty: no view to maintain yet
+          Some(v.localCheckpoint(true))
+        case _ => view // one side still empty: no view to maintain yet
       }
     }
 
-    /** Fold one micro-batch of the A-side changelog. The view fold
-      * reads the PRE-merge base (passed as an argument, never written
-      * back into the field), so aSnap always points at the merged
-      * snapshot from the moment it advances.
-      */
-    def absorbA(batch: DataFrame): Unit = synchronized {
-      val prior = aSnap
-      // r17 note: a LAZY snapshot checkpoint here (materialized by the
-      // view fold) was A/B'd and REVERTED — measured neutral-to-worse
-      // (stream_join_mv 3.4–3.9 s eager vs 4.0–4.2 s lazy at sf0.1); the
-      // deferred final stage just moved into the view job's critical
-      // path.
-      aSnap = Some((prior match {
-        case None => CdcMerge.compact(batch, aKey, aOrd)
-        case Some(base) => CdcMerge.merge(base, batch, aKey, aOrd)
-      }).localCheckpoint(true))
-      prior match {
-        case Some(base0) =>
-          rebuildOrMaintain(Some(base0), bSnap, Some(batch), None)
-        case None => rebuildOrMaintain(aSnap, bSnap, None, None)
-      }
+    /** Fold one micro-batch of the A-side changelog. */
+    def absorbA(batch: DataFrame): Unit = advance { prior =>
+      val (a0, b, view) = prior.getOrElse((None, None, None))
+      val a = Some(side(a0, batch, aKey, aOrd))
+      (a, b, a0 match {
+        case Some(_) => nextView(view, a0, b, a, b, Some(batch), None)
+        case None => nextView(view, a, b, a, b, None, None)
+      })
     }
 
     /** Fold one micro-batch of the B-side changelog. */
-    def absorbB(batch: DataFrame): Unit = synchronized {
-      val prior = bSnap
-      bSnap = Some((prior match {
-        case None => CdcMerge.compact(batch, bKey, bOrd)
-        case Some(base) => CdcMerge.merge(base, batch, bKey, bOrd)
-      }).localCheckpoint(true))
-      prior match {
-        case Some(base0) =>
-          rebuildOrMaintain(aSnap, Some(base0), None, Some(batch))
-        case None => rebuildOrMaintain(aSnap, bSnap, None, None)
-      }
+    def absorbB(batch: DataFrame): Unit = advance { prior =>
+      val (a, b0, view) = prior.getOrElse((None, None, None))
+      val b = Some(side(b0, batch, bKey, bOrd))
+      (a, b, b0 match {
+        case Some(_) => nextView(view, a, b0, a, b, None, Some(batch))
+        case None => nextView(view, a, b, a, b, None, None)
+      })
     }
-
-    def runA(changeStream: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      changeStream.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorbA(b.toDF()))
-        .start()
-
-    def runB(changeStream: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      changeStream.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorbB(b.toDF()))
-        .start()
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{Column, DataFrame}
 import graft.operators.CdcMerge
 
 /** Streaming steady-state of incremental MV maintenance
@@ -20,41 +19,33 @@ import graft.operators.CdcMerge
   */
 object StreamingMv {
 
+  /** [[current]] holds the compacted snapshot (tombstones retained)
+    * and its serving aggregate as one (snapshot, aggregate) pair, so a
+    * reader never pairs one batch's snapshot with another's aggregate.
+    */
   final class Maintainer(keyCols: Seq[String], orderCols: Seq[String],
-      groupCol: String, valueCol: Column, isServing: Column) {
-    @volatile private var snap: Option[DataFrame] = None
-    @volatile private var agg: Option[DataFrame] = None
+      groupCol: String, valueCol: Column, isServing: Column)
+      extends Fold[(DataFrame, DataFrame)] {
 
     /** The maintained serving aggregate (groupCol, n_keys, total). */
-    def currentAgg: Option[DataFrame] = agg
+    def currentAgg: Option[DataFrame] = current.map(_._2)
 
     /** The compacted snapshot (tombstones retained). */
-    def currentSnapshot: Option[DataFrame] = snap
+    def currentSnapshot: Option[DataFrame] = current.map(_._1)
 
-    def absorb(batch: DataFrame): Unit = synchronized {
-      val (nextSnap, nextAgg) = snap match {
-        case None =>
-          val s = CdcMerge.compact(batch, keyCols, orderCols)
-            .localCheckpoint(true)
-          (s, CdcMerge.servingAgg(s, groupCol, valueCol, isServing))
-        case Some(base) =>
-          val a = CdcMerge.maintainAggFrom(agg.get, base, batch,
-            keyCols, orderCols, groupCol, valueCol, isServing)
-          // the aggregate fold must read the PRE-merge snapshot; the
-          // snapshot then advances for the next batch's retractions
-          (CdcMerge.merge(base, batch, keyCols, orderCols)
-            .localCheckpoint(true), a)
-      }
-      snap = Some(nextSnap)
-      agg = Some(nextAgg.localCheckpoint(true))
+    def absorb(batch: DataFrame): Unit = advance {
+      case None =>
+        val s = CdcMerge.compact(batch, keyCols, orderCols)
+          .localCheckpoint(true)
+        (s, CdcMerge.servingAgg(s, groupCol, valueCol, isServing)
+          .localCheckpoint(true))
+      case Some((base, agg)) =>
+        val a = CdcMerge.maintainAggFrom(agg, base, batch,
+          keyCols, orderCols, groupCol, valueCol, isServing)
+        // the aggregate fold must read the PRE-merge snapshot; the
+        // snapshot then advances for the next batch's retractions
+        (CdcMerge.merge(base, batch, keyCols, orderCols)
+          .localCheckpoint(true), a.localCheckpoint(true))
     }
-
-    def run(changeStream: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      changeStream.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorb(b.toDF()))
-        .start()
   }
 }

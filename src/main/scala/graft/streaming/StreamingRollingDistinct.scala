@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.RollingDistinct
 
 /** Streaming steady-state of the rolling-distinct sketch
@@ -28,40 +27,30 @@ import graft.operators.RollingDistinct
 object StreamingRollingDistinct {
 
   final class Maintainer(dayCol: String, keyCol: String,
-      windowDays: Int, m: Int) {
+      windowDays: Int, m: Int) extends Fold[DataFrame] {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
     require(m >= 1, s"m must be >= 1, got $m")
 
-    @volatile private var pairs: Option[DataFrame] = None
-
     /** The held sketch state: distinct (day, bucket) — ≤ days·m rows. */
-    def currentPairs: Option[DataFrame] = pairs
+    def currentPairs: Option[DataFrame] = current
 
     /** (day, z_occupied) for each day seen so far: the trailing-window
       * occupancy the dashboard serves (estimate = −m·ln(1−z/m)
       * downstream).
       */
     def currentOccupancy: Option[DataFrame] =
-      pairs.map(p =>
+      current.map(p =>
         RollingDistinct.rolledFromDeduped(p, "day", "b", windowDays,
           "z_occupied"))
 
-    def absorb(batch: DataFrame): Unit = synchronized {
+    def absorb(batch: DataFrame): Unit = advance { prior =>
       val b = batch.select(col(dayCol).as("day"),
         RollingDistinct.bucket(col(keyCol), m).as("b")).distinct()
-      val next = pairs match {
+      val next = prior match {
         case None => b
         case Some(p) => p.union(b).distinct()
       }
-      pairs = Some(next.localCheckpoint(true))
+      next.localCheckpoint(true)
     }
-
-    def run(events: DataFrame, checkpoint: String,
-        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-      events.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch((b: Dataset[Row], _: Long) => absorb(b.toDF()))
-        .start()
   }
 }

@@ -57,7 +57,8 @@ class StreamingCdcSpec extends SparkSpec {
       // (AvailableNow would capture the end offset at start and serve
       // everything as one batch — never exercising the merge path)
       val q = compactor.run(mem.toDF().toDF(cols: _*), ckptDir.toString,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        compactor.absorb)
       // three uneven batches; the third is entirely late-or-new data
       mem.addData(rows.take(4): _*)
       q.processAllAvailable()
@@ -80,6 +81,46 @@ class StreamingCdcSpec extends SparkSpec {
       // and the late row did not displace key 1's newest write
       val k1 = streamed.find(_.head == 1L).get
       assert(k1(1) == "purchase" && k1(4) == 13L)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  test("a fresh compactor refuses a checkpoint whose batches it never " +
+    "absorbed") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String, Double, Timestamp, Long)]
+    val first = new StreamingCdc.Compactor(key, ord)
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_cdc_restart")
+    val trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)
+    try {
+      val q = first.run(mem.toDF().toDF(cols: _*), ckptDir.toString,
+        trigger)(first.absorb)
+      mem.addData(rows.take(4): _*)
+      q.processAllAvailable()
+      q.stop()
+
+      // batch 0 is committed, but its rows live only in `first`: a new
+      // compactor resuming the checkpoint would never see them
+      val fresh = new StreamingCdc.Compactor(key, ord)
+      val err = intercept[IllegalStateException] {
+        fresh.run(mem.toDF().toDF(cols: _*), ckptDir.toString,
+          trigger)(fresh.absorb).stop()
+      }
+      assert(err.getMessage.contains(ckptDir.toString))
+      assert(fresh.current.isEmpty)
+
+      // the compactor that absorbed batch 0 still resumes its checkpoint
+      val resumed = first.run(mem.toDF().toDF(cols: _*), ckptDir.toString,
+        trigger)(first.absorb)
+      mem.addData(rows.drop(4): _*)
+      resumed.processAllAvailable()
+      resumed.stop()
+      assert(first.current.get.orderBy("user_id").collect().map(_.toSeq)
+        .toSeq == CdcMerge.compact(rows.toDF(cols: _*), key, ord)
+        .orderBy("user_id").collect().map(_.toSeq).toSeq)
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq

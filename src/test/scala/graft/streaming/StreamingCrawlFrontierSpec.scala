@@ -70,7 +70,8 @@ class StreamingCrawlFrontierSpec extends SparkSpec {
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_scf")
     try {
       val q = m.run(mem.toDF().toDF("doc_id", "url"), ckptDir.toString,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        m.absorb)
       mem.addData(rows.take(5): _*)
       q.processAllAvailable()
       mem.addData(rows.drop(5): _*)

@@ -65,7 +65,8 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_shh")
     try {
       val q = m.run(mem.toDF().toDF("kind", "uid"), ckptDir.toString,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        m.absorb)
       mem.addData(rows.take(6): _*)
       q.processAllAvailable()
       mem.addData(rows.drop(6): _*)

@@ -101,7 +101,8 @@ class StreamingHistogramSpec extends SparkSpec {
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_shist")
     try {
       val q = maint.run(mem.toDF().toDF("v"), ckptDir.toString,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        maint.absorb)
       mem.addData(values.take(8): _*)
       q.processAllAvailable()
       mem.addData(values.drop(8): _*)

@@ -67,10 +67,12 @@ class StreamingJoinMvSpec extends SparkSpec {
       Seq("aid"), Seq("ts"), aServ, Seq("j"), Seq("ver"), bServ, Seq("j"))
     val ckpt = java.nio.file.Files.createTempDirectory("graft_jmv_ckpt")
     try {
-      val qa = mv.runA(memA.toDF().toDF(aCols: _*),
-        s"$ckpt/a", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      val qb = mv.runB(memB.toDF().toDF(bCols: _*),
-        s"$ckpt/b", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      val qa = mv.run(memA.toDF().toDF(aCols: _*),
+        s"$ckpt/a", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        mv.absorbA)
+      val qb = mv.run(memB.toDF().toDF(bCols: _*),
+        s"$ckpt/b", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        mv.absorbB)
 
       // A arrives first: no view until B exists
       memA.addData(aRows.take(3): _*)

@@ -63,7 +63,8 @@ class StreamingMvSpec extends SparkSpec {
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_mv_ckpt")
     try {
       val q = mv.run(mem.toDF().toDF(cols: _*), ckptDir.toString,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        mv.absorb)
       mem.addData(rows.take(4): _*)
       q.processAllAvailable()
       // mid-stream: the held MV must equal a recompute of the prefix
@@ -88,4 +89,47 @@ class StreamingMvSpec extends SparkSpec {
         .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
+
+  test("a reader mid-batch sees the snapshot and the aggregate of one " +
+    "batch") {
+    import StreamingMvSpec.{Armed, Entered, Release}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the value column parks its tasks while armed, so batch 2's
+    // aggregate job (the only job that evaluates it) holds the step open
+    val parked = udf { (v: Double) =>
+      if (Armed.get) {
+        Entered.countDown()
+        Release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      v
+    }
+    val mv = new StreamingMv.Maintainer(key, ord, "event_type",
+      parked(col("value")).cast(DecimalType(18, 2)), servingP)
+    mv.absorb(rows.take(4).toDF(cols: _*))
+
+    Armed.set(true)
+    val batch2 = Future(mv.absorb(rows.slice(4, 8).toDF(cols: _*)))
+    val (snap, agg) =
+      try {
+        assert(Entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "batch 2's aggregate job never ran the value column")
+        (mv.currentSnapshot.get, mv.currentAgg.get)
+      } finally {
+        Armed.set(false)
+        Release.countDown()
+      }
+    Await.result(batch2, 2.minutes)
+
+    assert(aggOf(agg) === aggOf(CdcMerge.servingAgg(snap, "event_type",
+      money, servingP)))
+  }
+}
+
+object StreamingMvSpec {
+  // local-mode tasks run in the test JVM, so a UDF reaches these directly
+  val Armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val Entered = new java.util.concurrent.CountDownLatch(1)
+  val Release = new java.util.concurrent.CountDownLatch(1)
 }

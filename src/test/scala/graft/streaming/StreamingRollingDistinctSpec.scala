@@ -77,7 +77,8 @@ class StreamingRollingDistinctSpec extends SparkSpec {
       // ProcessingTime(0L): AvailableNow snapshots the (empty) source at
       // start, so data added afterwards would never drain
       val q = maint.run(stream, ckptDir.toString,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(
+        maint.absorb)
       mem.addData(rows.take(5).map { case (dt, k) =>
         (dt.toLocalDate.getDayOfMonth, k) }: _*)
       q.processAllAvailable()
