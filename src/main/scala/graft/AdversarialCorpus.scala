@@ -138,14 +138,7 @@ object AdversarialCorpus {
   */
 object AdversarialGoldenGen {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val dir =
       if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft_adv").toString

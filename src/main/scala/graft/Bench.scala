@@ -7,7 +7,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -67,31 +66,45 @@ object Bench {
 
   private val ControlEvery = 8
 
+  /** The committed sf0.1 anchor, relative to the working directory. */
+  val AnchorFile = "bench_full.json"
+
+  /** Per-query seconds: the `queries` object of a Bench artifact (the
+    * first of its one-line JSON objects; its values hold no braces).
+    */
+  def anchorLaps(path: String): Map[String, Double] = {
+    val txt = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), "UTF-8")
+    val key = "\"queries\":{"
+    val at = txt.indexOf(key)
+    require(at >= 0, s"$path has no queries object")
+    val body = txt.substring(at + key.length, txt.indexOf("}", at))
+    "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
+
+  /** `f`, or `default` after naming the failure on stderr. */
+  private def orElse[A](what: String, default: A)(f: => A): A =
+    try f
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $what FAILED: $e")
+        default
+    }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // testdata tables are single parquet files; split them so scans use
-      // all local cores (at cluster scale the default 128m is right — many
-      // files supply the parallelism instead)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    LogHygiene.setLevelAndFilter(spark.sparkContext, "WARN")
+    val sfDir = Sessions.sfDir
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
     val work = new WorkListener
     spark.sparkContext.addSparkListener(work)
     def fmt(v: Double): String =
       "%.4f".formatLocal(java.util.Locale.ROOT, v)
     def loadAvg1m(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      orElse("load average read", -1.0)(java.nio.file.Files.readString(
+        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble)
     def ownCpuSec(): Double =
-      try {
+      orElse("own cpu read", -1.0) {
         // /proc/self/stat fields 14/15 (utime, stime) in clock ticks;
         // comm (field 2) can contain spaces but is parenthesized — split
         // after the closing paren
@@ -99,7 +112,7 @@ object Bench {
           java.nio.file.Paths.get("/proc/self/stat"))
         val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
         (rest(11).toLong + rest(12).toLong) / 100.0
-      } catch { case _: Throwable => -1.0 }
+      }
     // Scheduler-latency control: 8 sequential tiny jobs over a 32-row
     // range — near-zero work, so its time ≈ 8 × (job submit + schedule +
     // collect round-trip), the term co-tenant load multiplies. Kept off
@@ -109,13 +122,6 @@ object Bench {
       var i = 0
       while (i < 8) { spark.sparkContext.range(0, 32, 1, 4).count(); i += 1 }
       (System.nanoTime() - t0) / 1e9
-    }
-    // Minimal telemetry snapshot (no SQL control — usable before the
-    // table cache is warm): sched-chain secs, loadavg, cumulative GC,
-    // cumulative own-cpu, listener-bus depth, cleaner reference count.
-    def miniSampleJson(): String = {
-      val sched = schedChain()
-      s"""{"sched":${fmt(sched)},"load1m":${fmt(loadAvg1m())},"gc_cum":${fmt(gcMillis() / 1e3)},"own_cpu_cum":${fmt(ownCpuSec())},"bus_depth":${GraftSparkBridge.listenerQueueDepth(spark.sparkContext)},"cleaner_refs":${GraftSparkBridge.cleanerRefCount(spark.sparkContext)}}"""
     }
     // ---- COLD-SCAN LANE (r17, guide §6) ------------------------------
     // One uncached noop lap per base table, run before ANYTHING warms the
@@ -132,11 +138,11 @@ object Bench {
     val coldScanJson: String = {
       def lapCold(name: String,
           df: => org.apache.spark.sql.DataFrame): Option[(String, Double)] =
-        try {
+        orElse(s"cold scan $name", Option.empty[(String, Double)]) {
           val t0 = System.nanoTime()
           df.write.format("noop").mode("overwrite").save()
           Some(name -> ((System.nanoTime() - t0) / 1e9))
-        } catch { case NonFatal(_) => None }
+        }
       val full = Tables.All.flatMap { t =>
         lapCold(t, if (t == "events") Tables.events(spark, sfDir)
           else Tables.load(spark, sfDir, t))
@@ -150,35 +156,7 @@ object Bench {
         .mkString("{", ",", "}")
     }
     println(s"""{"metric":"coldscan","unit":"sec","scans":$coldScanJson}""")
-    // ---- Streaming throughput, FIRST POSITION (r9 verdict #1) --------
-    // Three driver rounds read 25.9k → 15.3k → 8.3k rows/sec with the
-    // measurement sitting AFTER the (now 179-query) suite, inside the
-    // exact window where the run's own controls read ×5–9 inflated — the
-    // absolute number was unattributable. The HEADLINE stream_throughput
-    // is therefore measured here, before the suite touches the driver
-    // (one untimed warm-up drain first: JIT/codegen for the streaming
-    // path, exactly the discipline every batch query gets), bracketed by
-    // its own telemetry samples. A second, LATE drain at the original
-    // position is reported as stream_throughput_late so the first-vs-late
-    // delta — the driver-accumulation tax — is in-artifact every round.
     schedChain(); schedChain() // warm the sched control itself
-    def streamLine(metric: String): Unit = {
-      val pre = miniSampleJson()
-      val r = StreamBench.run(spark, sfDir)
-      val post = miniSampleJson()
-      val batchLaps = r.batchLaps.map { case (id, rows, ms) =>
-        s"[$id,$rows,$ms]"
-      }.mkString("[", ",", "]")
-      println(s"""{"metric":"$metric","value":${fmt(r.inputRows / r.secs)},"unit":"rows/sec","rows":${r.inputRows},"fact_rows":${r.factRows},"batches":${r.batches},"secs":${fmt(r.secs)},"batch_laps":$batchLaps,"pre":$pre,"post":$post}""")
-      StreamBench.cleanup(r)
-    }
-    try {
-      val warm = StreamBench.run(spark, sfDir); StreamBench.cleanup(warm)
-      streamLine("stream_throughput")
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] stream_throughput FAILED: ${e.getMessage}")
-    }
     // Untimed warm-up: JVM/codegen/classloading, plus hot-cache the tables
     // — CacheManager matches later identical scans by logical plan, so the
     // timed queries run against memory like a warmed warehouse. (At 100 TB
@@ -406,18 +384,8 @@ object Bench {
     // emitted beside the honest primary — the flag attributes, the
     // requiet quantifies.
     val prevAnchor: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/root/repo/bench_full.json")), "UTF-8")
-        val qAt = txt.indexOf("\"queries\":{")
-        if (qAt < 0) Map.empty
-        else {
-          val endAt = txt.indexOf("}", qAt)
-          val body = txt.substring(qAt + 11, endAt)
-          "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } catch { case _: Throwable => Map.empty }
+      orElse(s"anchor read of $AnchorFile", Map.empty[String, Double])(
+        anchorLaps(AnchorFile))
     val requieted: Map[String, Double] =
       if (windowFlag <= 1.5 || prevAnchor.isEmpty || onlySet.nonEmpty)
         Map.empty
@@ -494,12 +462,10 @@ object Bench {
     // directory merely ENDING in "sf0.1" (alt-sf0.1) clobbered the
     // committed anchor. Normalize and compare the final path segment.
     val isAnchorSf =
-      (try java.nio.file.Paths.get(sfDir).normalize()
-        .getFileName.toString == "sf0.1"
-      catch { case _: Throwable => false }) && onlySet.isEmpty
+      orElse(s"anchor check of $sfDir", false)(java.nio.file.Paths.get(sfDir)
+        .normalize().getFileName.toString == "sf0.1") && onlySet.isEmpty
     val benchPath =
-      if (isAnchorSf) "/root/repo/bench_full.json"
-      else "/root/repo/bench_full_smoke.json"
+      if (isAnchorSf) AnchorFile else "bench_full_smoke.json"
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(benchPath),
@@ -518,16 +484,6 @@ object Bench {
     // in the official run are explainable from the official artifact even
     // if bench_full.json's telemetry block is all that's lost.
     println(s"""{"metric":"bench_controls","env":$envJson,"every":$ControlEvery,"samples":$controlsJson}""")
-    // Late-position streaming drain (the pre-r10 position): same
-    // measurement after the full suite has filled the driver. The
-    // first-vs-late delta, with each line's own pre/post telemetry, IS
-    // the attribution the r9 slide lacked.
-    try streamLine("stream_throughput_late")
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] stream_throughput_late FAILED: ${e.getMessage}")
-    }
     // r6 finding: at 89 queries even the laps-free line outgrows the tail
     // window, losing its head (and the total with it). The LAST line is
     // therefore MINIMAL — no queries map, so it fits any capture window

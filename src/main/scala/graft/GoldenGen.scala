@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the golden hashes pinned in src/test/resources/golden/.
   * Usage: runMain graft.GoldenGen <sfDir>
   * Prints one `name=hash` line per pinned query; redirect into the
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object GoldenGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     GoldenHash.pinnedQueries.foreach { name =>
       val h = GoldenHash.tableHash(SparkEntry.queries(name)(spark, sfDir))
       println(s"GOLDEN $name=$h")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from an existing testdata dir by
@@ -23,14 +23,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val f = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    LogHygiene.setLevelAndFilter(spark.sparkContext, "WARN")
+    val spark = Sessions.local()
 
     val C = 1000000L  // custkey/partkey/suppkey/user/doc/vec stride
     val O = 10000000L // orderkey stride

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -17,14 +16,7 @@ object Verify {
     val unknown = names -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     def selected(name: String): Boolean = names.isEmpty || names(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    LogHygiene.setLevelAndFilter(spark.sparkContext, "WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach {
       case (name, fn) =>
@@ -50,15 +42,5 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-  }
-}
-
-/** Back-compat alias for the targeted form (round-7 scripts/docs call
-  * `VerifyOne <sfDir> <outDir> <query>...`); one implementation.
-  */
-object VerifyOne {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: VerifyOne <sfDir> <outDir> <query>...")
-    Verify.main(args)
   }
 }

@@ -103,8 +103,8 @@ object GraftFunctions {
   }
 }
 
-/** Builder-time registration for library users:
-  * SparkSession.builder().withExtensions(new GraftExtensions)… or
+/** Builder-time registration for library users: a session builder's
+  * `.withExtensions(new GraftExtensions)`, or
   * --conf spark.sql.extensions=graft.functions.GraftExtensions.
   * Injects the same functions as GraftFunctions.register, but into every
   * session derived from the builder.

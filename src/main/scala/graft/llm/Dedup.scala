@@ -617,7 +617,7 @@ object Dedup {
     * deterministic result as [[connectedComponents]] (cluster id = min id
     * in the component, equivalence spec-pinned); prefer this form when
     * components can be deep (long transitive near-dup chains). Measured
-    * (`runMain graft.ScaleProbe cc 120 200`): x3.07 over the fused
+    * (`Test/runMain graft.ScaleProbe cc 120 200`): x3.07 over the fused
     * double-step propagation on 200 disjoint chains of diameter 119,
     * identical outputs.
     *

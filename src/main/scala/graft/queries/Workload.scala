@@ -220,7 +220,7 @@ object Workload {
     * bounded-heap aggregate shuffles at most k rows per group (map-side
     * combine), where the window realization sorts every row of every
     * group. Shares q05's oracle — the two plans must agree exactly.
-    * Measured crossover (`runMain graft.ScaleProbe topk`, re-measured r9
+    * Measured crossover (`Test/runMain graft.ScaleProbe topk`, re-measured r9
     * at q05's real group count 150): DEAD HEAT at 2M rows (×1.01);
     * aggregate wins ×1.63 at 20M and ×1.93 at 60M — the crossover sits
     * near ~13k rows/group and the gap grows with rows-per-group, which

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale-behavior probes (run ad hoc, not part of the driver contract):
+/** Scale-behavior probes, run ad hoc (none is in `SparkEntry.queries`).
+  * Each mode times one operator at a base size and at a multiple of it,
+  * or against its naive counterpart; the modes and their arguments are
+  * the table in `main`. For example:
   *
   *  - `minhash` (default): replicates the documents corpus N× (distinct
   *    ids) and times the MinHash-LSH candidate stage at 1× and N×.
@@ -21,292 +24,74 @@ import org.apache.spark.sql.functions._
   *    planted skew — the measurement behind the broadcast-blacklist df
   *    cap (a hot gram must cost ~nothing, not a one-task hotspot).
   *
-  * Usage: runMain graft.ScaleProbe
-  *   [minhash [mult] | topk [rows] [groups] | cc [chainLen] [nChains]
-  *    | hotgram [docs] [hotPct] | hotbucket [bg] [hot]
-  *    | bpetrain [batchK] | kmeans [k] | prefix [rows] | zorder [rows]
-  *    | pagerank [edges] [mult] | bfs [edges] [mult] | crawl [rows]
-  *    | rollingdistinct [users] [mult] | trisample]
+  * Usage: sbt "Test/runMain graft.ScaleProbe [mode] [args ...]"
+  * (a bare number N runs `minhash` at N×).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val mode = if (args.nonEmpty) args(0) else "minhash"
+    val sfDir = Sessions.sfDir
+    val mode =
+      args.headOption.filterNot(_.forall(_.isDigit)).getOrElse("minhash")
     val mult =
       if (args.length > 1) args(1).toInt
       else if (args.nonEmpty && args(0).forall(_.isDigit)) args(0).toInt
       else 10
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "8") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    def int(i: Int, default: Int): Int =
+      if (args.length > i) args(i).toInt else default
+    def long(i: Int, default: Long): Long =
+      if (args.length > i) args(i).toLong else default
+    val modes: Map[String, SparkSession => Unit] = Map(
+      "minhash" -> (minhashProbe(_, sfDir, mult)),
+      "topk" -> (topkProbe(_, long(1, 20000000L), int(2, 200))),
+      "cc" -> (ccProbe(_, int(1, 120), int(2, 200))),
+      "hotgram" -> (hotGramProbe(_, long(1, 200000L), int(2, 50))),
+      "ladder" -> (ladderProbe(_, sfDir)),
+      "crawl" -> (crawlProbe(_, long(1, 20000000L))),
+      "span" -> (spanProbe(_, sfDir, mult)),
+      "spanhash" -> (spanHashProbe(_, sfDir, mult)),
+      "overlap" -> (overlapProbe(_, long(1, 50000L), int(2, 8))),
+      "bpetrain" -> (bpeTrainProbe(_, sfDir, int(1, 8),
+        Option.when(args.length > 2)(args(2).toInt))),
+      "bpetrain1k" -> (bpeTrain1kProbe(_, int(1, 1))),
+      "kmeans" -> (kmeansProbe(_, sfDir, int(1, 8))),
+      "hotbucket" -> (hotBucketProbe(_, long(1, 50000L), long(2, 2000L))),
+      "multitouch" -> (multitouchProbe(_, sfDir, long(1, 20000L))),
+      "cumdistinct" -> (cumDistinctProbe(_, int(1, 365), long(2, 100000L))),
+      "prefix" -> (prefixProbe(_, long(1, 20000000L))),
+      "fuzzy" -> (fuzzyProbe(_, sfDir, int(1, 10))),
+      "pq" -> (pqProbe(_, sfDir, int(1, 10))),
+      "trisample" -> (triSampleProbe(_, sfDir)),
+      "media" -> (mediaProbe(_, long(1, 20000L),
+        if (args.length > 2) args(2).split(",").toSet else Set.empty[String])),
+      "graphgc" -> (graphGcProbe(_, sfDir)),
+      "bloom" -> (bloomProbe(_, sfDir, int(1, 10))),
+      "joinmv" -> (joinMvProbe(_, sfDir, int(1, 10))),
+      "robots" -> (robotsProbe(_, long(1, 2000000L))),
+      "graphconv" -> (graphConvProbe(_, sfDir, int(1, 10))),
+      "histq" -> (histQProbe(_, sfDir, int(1, 10))),
+      "gprefix" -> (groupedPrefixProbe(_, long(1, 20000000L), int(2, 5))),
+      "zorder" -> (zorderProbe(_, long(1, 20000000L))),
+      "pagerank" -> (pagerankProbe(_, long(1, 2000000L), int(2, 10))),
+      "bfs" -> (bfsProbe(_, long(1, 2000000L), int(2, 10))),
+      "rollingdistinct" ->
+        (rollingDistinctProbe(_, long(1, 500000L), int(2, 10))))
+    val probe = modes.getOrElse(mode, sys.error(
+      s"unknown mode $mode; modes: ${modes.keys.toSeq.sorted.mkString(" ")}"))
+    val spark = Sessions.local()
+    try probe(spark) finally spark.stop()
+  }
 
-    if (mode == "topk") {
-      topkProbe(spark,
-        if (args.length > 1) args(1).toLong else 20000000L,
-        if (args.length > 2) args(2).toInt else 200)
-      spark.stop()
-      return
-    }
-    if (mode == "cc") {
-      ccProbe(spark,
-        if (args.length > 1) args(1).toInt else 120,
-        if (args.length > 2) args(2).toInt else 200)
-      spark.stop()
-      return
-    }
-    if (mode == "hotgram") {
-      hotGramProbe(spark,
-        if (args.length > 1) args(1).toLong else 200000L,
-        if (args.length > 2) args(2).toInt else 50)
-      spark.stop()
-      return
-    }
-    if (mode == "ladder") {
-      ladderProbe(spark, sfDir)
-      spark.stop()
-      return
-    }
-    if (mode == "crawl") {
-      crawlProbe(spark,
-        if (args.length > 1) args(1).toLong else 20000000L)
-      spark.stop()
-      return
-    }
-    if (mode == "span") {
-      spanProbe(spark, sfDir, mult)
-      spark.stop()
-      return
-    }
-    if (mode == "spanhash") {
-      spanHashProbe(spark, sfDir, mult)
-      spark.stop()
-      return
-    }
-    if (mode == "overlap") {
-      overlapProbe(spark,
-        if (args.length > 1) args(1).toLong else 50000L,
-        if (args.length > 2) args(2).toInt else 8)
-      spark.stop()
-      return
-    }
-    if (mode == "bpetrain") {
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-        .cache()
-      docs.count()
-      def time[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val r = f
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      llm.BpeTrain.trainMerges(spark, docs, 4) // warm-up
-      // sequential: one Spark round per merge — the per-round constant
-      // is the scheduler overhead a 32k vocab multiplies by 32k
-      for (n <- Seq(16, 64, 256)) {
-        val (m, t) = time(llm.BpeTrain.trainMerges(spark, docs, n))
-        println(f"PROBE bpetrain seq nMerges=$n learned=${m.size} " +
-          f"time=$t%.1fs (${t / m.size}%.3fs/merge-round)")
-      }
-      val bk = if (args.length > 1) args(1).toInt else 8
-      for (n <- Seq(64, 256)) {
-        val (m, t) = time(
-          llm.BpeTrain.trainMergesBatched(spark, docs, n, batchK = bk))
-        val rounds = m.map(_._5).distinct.size
-        println(f"PROBE bpetrain batched nMerges=$n batchK=$bk " +
-          f"learned=${m.size} rounds=$rounds time=$t%.1fs " +
-          f"(${t / rounds}%.3fs/round)")
-      }
-      // r8 verdict #3: the 32k-vocab extrapolation rested on a 14-round
-      // measurement — one production-round-count lap (nMerges ~ 1k)
-      // confirms (or refutes) that the per-round constant holds as the
-      // learned vocabulary and the pair-table width grow
-      if (args.length > 2) {
-        val bigN = args(2).toInt
-        val (m, t) = time(
-          llm.BpeTrain.trainMergesBatched(spark, docs, bigN, batchK = bk))
-        val rounds = m.map(_._5).distinct.size
-        println(f"PROBE bpetrain batched BIG nMerges=$bigN batchK=$bk " +
-          f"learned=${m.size} rounds=$rounds time=$t%.1fs " +
-          f"(${t / math.max(rounds, 1)}%.3fs/round)")
-      }
-      docs.unpersist()
-      spark.stop()
-      return
-    }
-    // The testdata corpus exhausts at ~90 learnable merges, so the
-    // bpetrain mode cannot reach production ROUND counts. This mode
-    // plants a pair-diverse corpus (seeded: 4k distinct 8–12-char
-    // pseudo-words, each repeated ~4×) that sustains >1k merges, then
-    // runs a merge-count LADDER at batchK=1 (one round per merge): the
-    // MARGINAL s/round between ladder rungs is the late-round constant —
-    // super-linear growth as the learned vocabulary widens the
-    // symbol/pair tables would show as rising marginal cost.
-    if (mode == "bpetrain1k") {
-      import spark.implicits._
-      val rnd = new scala.util.Random(42)
-      val words = (0 until 4000).map { _ =>
-        val len = 8 + rnd.nextInt(5)
-        (0 until len).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-      }
-      val texts = (0 until 2000).map { i =>
-        (0 until 8).map(j => words((i * 8 + j * 997) % words.size))
-          .mkString(" ")
-      }
-      val docs = texts.zipWithIndex
-        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text").cache()
-      docs.count()
-      def time[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val r = f
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      llm.BpeTrain.trainMergesBatched(spark, docs, 8, batchK = 4) // warm
-      val bk = if (args.length > 1) args(1).toInt else 1
-      var prevT = 0.0; var prevR = 0
-      for (n <- Seq(125, 250, 500, 1000)) {
-        val (m, t) = time(llm.BpeTrain.trainMergesBatched(spark, docs, n, bk))
-        val rounds = m.map(_._5).distinct.size
-        val marginal =
-          if (rounds > prevR) (t - prevT) / (rounds - prevR) else Double.NaN
-        println(f"PROBE bpetrain1k batchK=$bk nMerges=$n learned=${m.size} " +
-          f"rounds=$rounds time=$t%.1fs (${t / math.max(rounds, 1)}%.3fs/round, " +
-          f"marginal=$marginal%.3fs/round over rounds ${prevR + 1}..$rounds)")
-        prevT = t; prevR = rounds
-      }
-      docs.unpersist()
-      spark.stop()
-      return
-    }
-    if (mode == "kmeans") {
-      val emb = Tables.embeddings(spark, sfDir)
-      val n = emb.count()
-      val t0 = System.nanoTime()
-      val (asn, rounds) = llm.KMeans.fitConverged(emb,
-        k = if (args.length > 1) args(1).toInt else 8,
-        maxIters = 100, eps = 1e-9)
-      val nOut = asn.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"PROBE kmeans: vecs=$n assigned=$nOut rounds=$rounds " +
-        f"time=$dt%.1fs (${dt / rounds}%.2fs/round)")
-      spark.stop()
-      return
-    }
-    if (mode == "hotbucket") {
-      hotBucketProbe(spark,
-        if (args.length > 1) args(1).toLong else 50000L,
-        if (args.length > 2) args(2).toLong else 2000L)
-      spark.stop()
-      return
-    }
-    if (mode == "multitouch") {
-      multitouchProbe(spark, sfDir,
-        if (args.length > 1) args(1).toLong else 20000L)
-      spark.stop()
-      return
-    }
-    if (mode == "cumdistinct") {
-      cumDistinctProbe(spark,
-        if (args.length > 1) args(1).toInt else 365,
-        if (args.length > 2) args(2).toLong else 100000L)
-      spark.stop()
-      return
-    }
-    if (mode == "prefix") {
-      prefixProbe(spark,
-        if (args.length > 1) args(1).toLong else 20000000L)
-      spark.stop()
-      return
-    }
-    if (mode == "fuzzy") {
-      fuzzyProbe(spark, sfDir, if (args.length > 1) args(1).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "pq") {
-      pqProbe(spark, sfDir, if (args.length > 1) args(1).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "trisample") {
-      triSampleProbe(spark, sfDir)
-      spark.stop()
-      return
-    }
-    if (mode == "media") {
-      mediaProbe(spark, if (args.length > 1) args(1).toLong else 20000L,
-        if (args.length > 2) args(2).split(",").toSet
-        else Set.empty[String])
-      spark.stop()
-      return
-    }
-    if (mode == "graphgc") {
-      graphGcProbe(spark, sfDir)
-      spark.stop()
-      return
-    }
-    if (mode == "bloom") {
-      bloomProbe(spark, sfDir, if (args.length > 1) args(1).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "joinmv") {
-      joinMvProbe(spark, sfDir, if (args.length > 1) args(1).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "robots") {
-      robotsProbe(spark, if (args.length > 1) args(1).toLong else 2000000L)
-      spark.stop()
-      return
-    }
-    if (mode == "graphconv") {
-      graphConvProbe(spark, sfDir,
-        if (args.length > 1) args(1).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "histq") {
-      histQProbe(spark, sfDir, if (args.length > 1) args(1).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "gprefix") {
-      groupedPrefixProbe(spark,
-        if (args.length > 1) args(1).toLong else 20000000L,
-        if (args.length > 2) args(2).toInt else 5)
-      spark.stop()
-      return
-    }
-    if (mode == "zorder") {
-      zorderProbe(spark,
-        if (args.length > 1) args(1).toLong else 20000000L)
-      spark.stop()
-      return
-    }
-    if (mode == "pagerank") {
-      pagerankProbe(spark,
-        if (args.length > 1) args(1).toLong else 2000000L,
-        if (args.length > 2) args(2).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "bfs") {
-      bfsProbe(spark,
-        if (args.length > 1) args(1).toLong else 2000000L,
-        if (args.length > 2) args(2).toInt else 10)
-      spark.stop()
-      return
-    }
-    if (mode == "rollingdistinct") {
-      rollingDistinctProbe(spark,
-        if (args.length > 1) args(1).toLong else 500000L,
-        if (args.length > 2) args(2).toInt else 10)
-      spark.stop()
-      return
-    }
+  /** `(result, seconds)` of evaluating `f`; `warmUp` evaluates it once,
+    * untimed, first (JIT + codegen + cached inputs).
+    */
+  private def time[A](f: => A, warmUp: Boolean = false): (A, Double) = {
+    if (warmUp) f
+    val t0 = System.nanoTime(); val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
 
+  private def minhashProbe(spark: SparkSession, sfDir: String,
+      mult: Int): Unit = {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
 
     def run(m: Int): (Long, Long, Double) = {
@@ -316,9 +101,7 @@ object ScaleProbe {
         .reduce(_ union _)
         .cache()
       val n = d.count()
-      val t0 = System.nanoTime()
-      val c = llm.Dedup.minhashCandidates(d).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (c, dt) = time(llm.Dedup.minhashCandidates(d).count())
       d.unpersist()
       (n, c, dt)
     }
@@ -330,7 +113,93 @@ object ScaleProbe {
     println(f"PROBE ${mult}x: docs=$nm candidates=$cm time=$tm%.1fs")
     println(f"PROBE ratio: size x$mult -> time x${tm / t1}%.1f " +
       f"(linear would be ~x$mult, quadratic ~x${mult * mult})")
-    spark.stop()
+  }
+
+  private def bpeTrainProbe(spark: SparkSession, sfDir: String, bk: Int,
+      bigN: Option[Int]): Unit = {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      .cache()
+    docs.count()
+    llm.BpeTrain.trainMerges(spark, docs, 4) // warm-up
+    // sequential: one Spark round per merge — the per-round constant
+    // is the scheduler overhead a 32k vocab multiplies by 32k
+    for (n <- Seq(16, 64, 256)) {
+      val (m, t) = time(llm.BpeTrain.trainMerges(spark, docs, n))
+      println(f"PROBE bpetrain seq nMerges=$n learned=${m.size} " +
+        f"time=$t%.1fs (${t / m.size}%.3fs/merge-round)")
+    }
+    for (n <- Seq(64, 256)) {
+      val (m, t) = time(
+        llm.BpeTrain.trainMergesBatched(spark, docs, n, batchK = bk))
+      val rounds = m.map(_._5).distinct.size
+      println(f"PROBE bpetrain batched nMerges=$n batchK=$bk " +
+        f"learned=${m.size} rounds=$rounds time=$t%.1fs " +
+        f"(${t / rounds}%.3fs/round)")
+    }
+    // r8 verdict #3: the 32k-vocab extrapolation rested on a 14-round
+    // measurement — one production-round-count lap (nMerges ~ 1k)
+    // confirms (or refutes) that the per-round constant holds as the
+    // learned vocabulary and the pair-table width grow
+    bigN.foreach { bigN =>
+      val (m, t) = time(
+        llm.BpeTrain.trainMergesBatched(spark, docs, bigN, batchK = bk))
+      val rounds = m.map(_._5).distinct.size
+      println(f"PROBE bpetrain batched BIG nMerges=$bigN batchK=$bk " +
+        f"learned=${m.size} rounds=$rounds time=$t%.1fs " +
+        f"(${t / math.max(rounds, 1)}%.3fs/round)")
+    }
+    docs.unpersist()
+  }
+
+  /** The testdata corpus exhausts at ~90 learnable merges, so the
+    * bpetrain mode cannot reach production ROUND counts. This mode
+    * plants a pair-diverse corpus (seeded: 4k distinct 8–12-char
+    * pseudo-words, each repeated ~4×) that sustains >1k merges, then
+    * runs a merge-count LADDER at batchK=1 (one round per merge): the
+    * MARGINAL s/round between ladder rungs is the late-round constant —
+    * super-linear growth as the learned vocabulary widens the
+    * symbol/pair tables would show as rising marginal cost.
+    */
+  private def bpeTrain1kProbe(spark: SparkSession, bk: Int): Unit = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(42)
+    val words = (0 until 4000).map { _ =>
+      val len = 8 + rnd.nextInt(5)
+      (0 until len).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    }
+    val texts = (0 until 2000).map { i =>
+      (0 until 8).map(j => words((i * 8 + j * 997) % words.size))
+        .mkString(" ")
+    }
+    val docs = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text").cache()
+    docs.count()
+    llm.BpeTrain.trainMergesBatched(spark, docs, 8, batchK = 4) // warm
+    var prevT = 0.0; var prevR = 0
+    for (n <- Seq(125, 250, 500, 1000)) {
+      val (m, t) = time(llm.BpeTrain.trainMergesBatched(spark, docs, n, bk))
+      val rounds = m.map(_._5).distinct.size
+      val marginal =
+        if (rounds > prevR) (t - prevT) / (rounds - prevR) else Double.NaN
+      println(f"PROBE bpetrain1k batchK=$bk nMerges=$n learned=${m.size} " +
+        f"rounds=$rounds time=$t%.1fs (${t / math.max(rounds, 1)}%.3fs/round, " +
+        f"marginal=$marginal%.3fs/round over rounds ${prevR + 1}..$rounds)")
+      prevT = t; prevR = rounds
+    }
+    docs.unpersist()
+  }
+
+  private def kmeansProbe(spark: SparkSession, sfDir: String,
+      k: Int): Unit = {
+    val emb = Tables.embeddings(spark, sfDir)
+    val n = emb.count()
+    val ((nOut, rounds), dt) = time {
+      val (asn, rounds) = llm.KMeans.fitConverged(emb, k = k,
+        maxIters = 100, eps = 1e-9)
+      (asn.count(), rounds)
+    }
+    println(f"PROBE kmeans: vecs=$n assigned=$nOut rounds=$rounds " +
+      f"time=$dt%.1fs (${dt / rounds}%.2fs/round)")
   }
 
   /** Duplicate-passage scale behavior: replicating the corpus m× is the
@@ -353,13 +222,11 @@ object ScaleProbe {
         .reduce(_ union _)
         .cache()
       val nd = d.count()
-      val t0 = System.nanoTime()
       // sum over the OUTPUT column: a bare count() would let Catalyst
       // eliminate the unique-key left join and skip the whole pipeline
       // (measured: 100x corpus "ran" in 0.5 s)
-      val dup = llm.Dedup.passageDupProfile(d)
-        .agg(sum(col("n_dup_spans"))).collect()(0).getLong(0)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (dup, dt) = time(llm.Dedup.passageDupProfile(d)
+        .agg(sum(col("n_dup_spans"))).collect()(0).getLong(0))
       d.unpersist()
       (nd, dup, dt)
     }
@@ -399,11 +266,10 @@ object ScaleProbe {
     def lap(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
         : (Long, Double, Long) = {
       Thread.sleep(1000); shuffle.set(0L)
-      val t0 = System.nanoTime()
       // sum over the OUTPUT column so the unique-key left join can't be
       // eliminated (the spanProbe lesson)
-      val dup = f(d).agg(sum(col("n_dup_spans"))).collect()(0).getLong(0)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (dup, dt) =
+        time(f(d).agg(sum(col("n_dup_spans"))).collect()(0).getLong(0))
       Thread.sleep(1000)
       (dup, dt, shuffle.get)
     }
@@ -446,10 +312,6 @@ object ScaleProbe {
     def viaRanks(s: DataFrame): Long =
       operators.IntervalJoin.overlapCounts(s, "st", "en", 600000L)
         .agg(sum(col("n_overlap"))).collect()(0).getLong(0)
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     viaPairs(sessions(n)); viaRanks(sessions(n)) // warm-up
     val s1 = sessions(n); val sm = sessions(n * mult)
     val (p1, tp1) = time(viaPairs(s1))
@@ -501,10 +363,6 @@ object ScaleProbe {
           maxBucketRows = cap)
         .filter(col("a_sid") =!= col("b_sid"))
         .count()
-    }
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
     }
     val cap = 1000L // >> any background bucket, << the plant
     val clean = bg.localCheckpoint(true)
@@ -582,10 +440,6 @@ object ScaleProbe {
         .filter(col("n") > cap).select(col("cu"))
       attrib(clicks.join(broadcast(bots), Seq("cu"), "left_anti"), buys)
     }
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val cap = 1000L
     attrib(clicks0, buys0) // warm-up
     val (nClean, tClean) = time(attrib(clicks0, buys0))
@@ -640,10 +494,6 @@ object ScaleProbe {
       c.groupBy("u").agg(min(col("day")).as("d0"))
         .groupBy("d0").agg(count(lit(1)).as("nu"))
         .count()
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     firstSeen(corpus(days / 4)) // warm-up
     for (d <- Seq(days, days * 2)) {
       val c = corpus(d)
@@ -662,11 +512,6 @@ object ScaleProbe {
     }
   }
 
-  /** Stage timings of the dedup ladder on the real corpus: pairs alone,
-    * then each connected-components realization over the same
-    * (checkpointed) pair set — the measurement behind the choice of CC
-    * algorithm in llm_dedup_clusters.
-    */
   /** Crawl-family scale probe: synthesize N raw URLs (three spellings
     * of ~N/20 canonical resources — a realistic crawl dup ratio), then
     * time (a) the map-only UrlNormalize parse and (b) the
@@ -690,10 +535,6 @@ object ScaleProbe {
         graft.functions.UrlNormalize.url_normalize(raw)
           .getField("url").as("url"))
     }
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     urls(100000).filter(col("url").isNotNull).count() // warm-up
     for (n <- Seq(rows / 10, rows)) {
       val (parsed, tp) = time(urls(n).filter(col("url").isNotNull).count())
@@ -707,14 +548,15 @@ object ScaleProbe {
     }
   }
 
+  /** Stage timings of the dedup ladder on the real corpus: pairs alone,
+    * then each connected-components realization over the same
+    * (checkpointed) pair set — the measurement behind the choice of CC
+    * algorithm in llm_dedup_clusters.
+    */
   private def ladderProbe(spark: SparkSession, sfDir: String): Unit = {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    time(llm.Dedup.jaccardPairsExact(docs, 0.8).count()) // warm-up
-    val (_, tPairs) = time(llm.Dedup.jaccardPairsExact(docs, 0.8).count())
+    val (_, tPairs) =
+      time(llm.Dedup.jaccardPairsExact(docs, 0.8).count(), warmUp = true)
     val pairs = llm.Dedup.jaccardPairsExact(docs, 0.8).localCheckpoint(true)
     val (nProp, tProp) = time(
       llm.Dedup.connectedComponents(pairs).count())
@@ -746,14 +588,10 @@ object ScaleProbe {
           (if (hot) Seq(when(col("id") % 100 < hotPct, lit("of the and"))
             .otherwise(concat(lit("u"), col("id"))))
            else Seq.empty): _*).as("text"))
-    def time(df: org.apache.spark.sql.DataFrame): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val c = llm.Dedup.jaccardPairsExact(df, 0.8).count()
-      (c, (System.nanoTime() - t0) / 1e9)
-    }
-    time(corpus(hot = false)) // warm-up
-    val (cClean, tClean) = time(corpus(hot = false))
-    val (cHot, tHot) = time(corpus(hot = true))
+    def pairs(df: org.apache.spark.sql.DataFrame): Long =
+      llm.Dedup.jaccardPairsExact(df, 0.8).count()
+    val (cClean, tClean) = time(pairs(corpus(hot = false)), warmUp = true)
+    val (cHot, tHot) = time(pairs(corpus(hot = true)))
     println(f"PROBE hotgram: docs=$nDocs hot=$hotPct%% " +
       f"clean=${tClean}%.1fs/$cClean pairs " +
       f"hot=${tHot}%.1fs/$cHot pairs ratio=x${tHot / tClean}%.2f " +
@@ -769,10 +607,6 @@ object ScaleProbe {
     val pairs = spark.range(nChains.toLong * chainLen)
       .filter(col("id") % chainLen =!= (chainLen - 1))
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val (prop, tp) = time(
       llm.Dedup.connectedComponents(pairs, maxIter = chainLen + 2)
         .orderBy("id").collect().toSeq)
@@ -784,10 +618,6 @@ object ScaleProbe {
       f"propagation=$tp%.1fs star=$ts%.1fs speedup=x${tp / ts}%.2f")
   }
 
-  /** Window-vs-TopKAggregate crossover measurement. Both plans read the
-    * same cached input and produce identical top-5 sets (asserted); the
-    * printed times are second-lap (post-JIT).
-    */
   /** Measures operators.OrderedPrefix (two-phase bucketed global
     * rank+running-sum, the q29/q32/q35 plan) against the single-window
     * form it replaces, on a planted frame large enough that the one-task
@@ -829,13 +659,12 @@ object ScaleProbe {
       .collect().map(_.toSeq).toSet
     require(a == b, s"plans disagree on the 100k sample: ${a.size} vs ${b.size}")
 
-    def time(f: () => Unit): Double = {
-      f(); val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
     // collect the 1-row max (NOT .count(): column pruning would drop the
     // max expression and the window/rank with it, timing a bare scan)
-    val tw = time(() => windowPlan().select(max(col("r") + col("p"))).collect())
-    val tb = time(() => bucketPlan().select(max(col("r") + col("p"))).collect())
+    val (_, tw) = time(windowPlan().select(max(col("r") + col("p"))).collect(),
+      warmUp = true)
+    val (_, tb) = time(bucketPlan().select(max(col("r") + col("p"))).collect(),
+      warmUp = true)
     println(f"PROBE prefix: rows=$n window=$tw%.2fs " +
       f"two_phase=$tb%.2fs speedup=x${tw / tb}%.2f")
   }
@@ -867,11 +696,9 @@ object ScaleProbe {
         : (Long, Long, Double, Long) = {
       val d = df.cache(); val n = d.count()
       Thread.sleep(1000); shuffle.set(0L)
-      val t0 = System.nanoTime()
-      val pairs = operators.FuzzyJoin
+      val (pairs, dt) = time(operators.FuzzyJoin
         .pairsWithin1(d, col("id"), col("s"), hashedKeys = hashed)
-        .agg(count(lit(1))).collect()(0).getLong(0)
-      val dt = (System.nanoTime() - t0) / 1e9
+        .agg(count(lit(1))).collect()(0).getLong(0))
       Thread.sleep(1000)
       d.unpersist()
       (n, pairs, dt, shuffle.get)
@@ -944,9 +771,9 @@ object ScaleProbe {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def lap(name: String, f: () => org.apache.spark.sql.DataFrame): Unit = {
-      val g0 = gcMs; val t0 = System.nanoTime()
-      noop(f())
-      println(f"PROBE graphgc $name: time=${(System.nanoTime() - t0) / 1e9}%6.2fs" +
+      val g0 = gcMs
+      val (_, dt) = time(noop(f()))
+      println(f"PROBE graphgc $name: time=$dt%6.2fs" +
         f" gc=${(gcMs - g0) / 1e3}%5.2fs")
     }
     // q40 pipeline with a pluggable materialization for sampled/oriented
@@ -1032,32 +859,32 @@ object ScaleProbe {
       ("approx p=1/16", 62499L, 4096L),
       ("approx p=1/64", 15625L, 262144L))
     def lap(threshold: Long): (Long, Long, Double) = {
-      val t0 = System.nanoTime()
-      val sampled = a.join(b, Seq("l_orderkey"))
-        .filter(col("pa") < col("pb"))
-        .select(col("pa"), col("pb"))
-        .filter(u % 999983L < threshold)
-        .distinct().localCheckpoint(false)
-      val deg = sampled.select(col("pa").as("n"))
-        .union(sampled.select(col("pb").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val lower = struct(col("da"), col("pa")) < struct(col("db"), col("pb"))
-      val oriented = sampled
-        .join(deg.select(col("n").as("pa"), col("d").as("da")), Seq("pa"))
-        .join(deg.select(col("n").as("pb"), col("d").as("db")), Seq("pb"))
-        .select(when(lower, col("pa")).otherwise(col("pb")).as("u"),
-          when(lower, col("pb")).otherwise(col("pa")).as("v"))
-        .localCheckpoint(false)
-      val wedges = oriented.select(col("u").as("ta"), col("v").as("tb"))
-        .join(oriented.select(col("u").as("tb"), col("v").as("tc")),
-          Seq("tb"))
-      val tri = wedges.join(
-        oriented.select(col("u").as("ta"), col("v").as("tc")),
-        Seq("ta", "tc"))
-      val row = tri.agg(count(lit(1)).as("t"))
-        .crossJoin(broadcast(sampled.agg(count(lit(1)).as("e"))))
-        .collect()(0)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (row, dt) = time {
+        val sampled = a.join(b, Seq("l_orderkey"))
+          .filter(col("pa") < col("pb"))
+          .select(col("pa"), col("pb"))
+          .filter(u % 999983L < threshold)
+          .distinct().localCheckpoint(false)
+        val deg = sampled.select(col("pa").as("n"))
+          .union(sampled.select(col("pb").as("n")))
+          .groupBy("n").agg(count(lit(1)).as("d"))
+        val lower = struct(col("da"), col("pa")) < struct(col("db"), col("pb"))
+        val oriented = sampled
+          .join(deg.select(col("n").as("pa"), col("d").as("da")), Seq("pa"))
+          .join(deg.select(col("n").as("pb"), col("d").as("db")), Seq("pb"))
+          .select(when(lower, col("pa")).otherwise(col("pb")).as("u"),
+            when(lower, col("pb")).otherwise(col("pa")).as("v"))
+          .localCheckpoint(false)
+        val wedges = oriented.select(col("u").as("ta"), col("v").as("tb"))
+          .join(oriented.select(col("u").as("tb"), col("v").as("tc")),
+            Seq("tb"))
+        val tri = wedges.join(
+          oriented.select(col("u").as("ta"), col("v").as("tc")),
+          Seq("ta", "tc"))
+        tri.agg(count(lit(1)).as("t"))
+          .crossJoin(broadcast(sampled.agg(count(lit(1)).as("e"))))
+          .collect()(0)
+      }
       (row.getLong(0), row.getLong(1), dt)
     }
     lap(249996L) // warm-up: JIT + codegen for the whole pipeline
@@ -1092,11 +919,6 @@ object ScaleProbe {
       df.join(keys.hint("shuffle_hash"),
         col("l_partkey") === col("p_partkey"), "left_semi")
         .agg(count(lit(1))).collect()(0).getLong(0)
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = f
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
     val probe1 = rep(1).cache(); val n1 = probe1.count()
     val probeM = rep(mult).cache(); val nM = probeM.count()
     val passed = operators.BloomPrefilter
@@ -1163,10 +985,6 @@ object ScaleProbe {
       .unionAll(dim0) // originals too: replicated rows keep original pk
       .dropDuplicates("pk").withColumn("dver", lit(1L))
       .localCheckpoint(false)
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val n = f
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
     def cnt(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(count(lit(1))).collect()(0).getLong(0)
     val results = Seq(5L, 50L, 500L).map { denom =>
@@ -1213,10 +1031,6 @@ object ScaleProbe {
         .cast("long").as("v"))
     def rep(m: Int) = (0 until m).map(_ => base).reduce(_ unionAll _)
       .localCheckpoint(false)
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     def sketch(df: org.apache.spark.sql.DataFrame): Map[Int, Double] =
       HistogramQuantile.percentiles(df, col("v"), 256, pcts)
         .select(col("pct"), col("estimate")).collect()
@@ -1264,9 +1078,6 @@ object ScaleProbe {
     def rep(m: Int) = (0 until m)
       .map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * stride)))
       .reduce(_ union _).cache()
-    def time(f: () => Unit): Double = {
-      f(); val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
     // The serving/build split mirrors deployment: codes, lists, and the
     // query LUT are the INDEX (built once, amortized over queries); a
     // query pays only the ADC join. Timing pqSearch end-to-end would
@@ -1276,38 +1087,39 @@ object ScaleProbe {
         : (Long, Double, Double, Double, Double) = {
       import org.apache.spark.sql.DataFrame
       val n = corpus.count()
-      val flat = time(() => llm.Similarity
+      val (_, flat) = time(llm.Similarity
         .quantizedTopK(corpus.filter(col("vec_id") < 10), corpus, 5)
-        .agg(sum(col("rank").cast("long"))).collect())
+        .agg(sum(col("rank").cast("long"))).collect(), warmUp = true)
       def built(df: DataFrame): DataFrame = { df.cache(); df.count(); df }
-      val t0 = System.nanoTime()
-      val d = built(llm.Similarity.pqSubDists(corpus, subDim))
-      val codes = built({
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id"), col("m")).orderBy(col("dist"), col("k"))
-        d.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-          .select(col("vec_id"), col("m"), col("k").as("code"))
-      })
-      val coarse = d.groupBy("vec_id", "k").agg(sum(col("dist")).as("cdist"))
       val wa = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("cdist"), col("k"))
-      val assign = built(coarse.withColumn("__rn", row_number().over(wa))
-        .filter(col("__rn") === 1).select(col("vec_id"), col("k").as("list")))
-      val build = (System.nanoTime() - t0) / 1e9
+      val ((d, codes, coarse, assign), build) = time {
+        val d = built(llm.Similarity.pqSubDists(corpus, subDim))
+        val codes = built({
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("vec_id"), col("m")).orderBy(col("dist"), col("k"))
+          d.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+            .select(col("vec_id"), col("m"), col("k").as("code"))
+        })
+        val coarse = d.groupBy("vec_id", "k").agg(sum(col("dist")).as("cdist"))
+        val assign = built(coarse.withColumn("__rn", row_number().over(wa))
+          .filter(col("__rn") === 1).select(col("vec_id"), col("k").as("list")))
+        (d, codes, coarse, assign)
+      }
       val lut = built(d.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("m"),
           col("k").as("code"), col("dist").as("ld")))
       val probes = built(coarse.filter(col("vec_id") < 10)
         .withColumn("__rn", row_number().over(wa)).filter(col("__rn") <= 4)
         .select(col("vec_id").as("query_id"), col("k").as("list")))
-      val servePq = time(() => llm.Similarity.adcTopK(codes, lut, 5)
-        .agg(sum(col("rank").cast("long"))).collect())
+      val (_, servePq) = time(llm.Similarity.adcTopK(codes, lut, 5)
+        .agg(sum(col("rank").cast("long"))).collect(), warmUp = true)
       val cands = assign.join(broadcast(probes), Seq("list"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("vec_id"), col("query_id"))
-      val serveIvf = time(() => llm.Similarity
+      val (_, serveIvf) = time(llm.Similarity
         .adcTopK(codes, lut, 5, Some(cands))
-        .agg(sum(col("rank").cast("long"))).collect())
+        .agg(sum(col("rank").cast("long"))).collect(), warmUp = true)
       Seq(d, codes, assign, lut, probes).foreach(_.unpersist())
       (n, flat, build, servePq, serveIvf)
     }
@@ -1364,11 +1176,10 @@ object ScaleProbe {
       .collect().map(_.toSeq).toSet
     require(a == b, s"plans disagree on the 100k sample: ${a.size} vs ${b.size}")
 
-    def time(f: () => Unit): Double = {
-      f(); val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
-    val tw = time(() => windowPlan().select(max(col("r") + col("p"))).collect())
-    val tb = time(() => groupedPlan().select(max(col("r") + col("p"))).collect())
+    val (_, tw) = time(windowPlan().select(max(col("r") + col("p"))).collect(),
+      warmUp = true)
+    val (_, tb) = time(groupedPlan().select(max(col("r") + col("p"))).collect(),
+      warmUp = true)
     println(f"PROBE gprefix: rows=$n groups=$groups window=$tw%.2fs " +
       f"two_phase=$tb%.2fs speedup=x${tw / tb}%.2f")
   }
@@ -1511,14 +1322,11 @@ object ScaleProbe {
         expr("DATE '2024-01-01' + CAST(pmod(hash(id), 30) AS INT)")
           .as("day"),
         pmod(hash(col("id") + 31L), lit(users)).cast("long").as("k"))
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def run(users: Long): (Double, Double) = {
       val df = mk(users).localCheckpoint(false)
-      val te = time(RollingDistinct.exact(df, "day", "k", 7)
+      val (_, te) = time(RollingDistinct.exact(df, "day", "k", 7)
         .write.format("noop").mode("overwrite").save())
-      val ts = time(RollingDistinct
+      val (_, ts) = time(RollingDistinct
         .sketchOccupancy(df, "day", "k", 7, 4096)
         .write.format("noop").mode("overwrite").save())
       (te, ts)
@@ -1532,6 +1340,10 @@ object ScaleProbe {
       f"at x$mult cardinality (sketch state capped at 30*4096)")
   }
 
+  /** Window-vs-TopKAggregate crossover measurement. Both plans read the
+    * same cached input and produce identical top-5 sets (asserted); the
+    * printed times are second-lap (post-JIT).
+    */
   private def topkProbe(spark: SparkSession, rows: Long, groups: Int): Unit = {
     import org.apache.spark.sql.expressions.Window
     val df = spark.range(rows).select(
@@ -1556,11 +1368,8 @@ object ScaleProbe {
     val aSet = aggPlan().collect().map(_.toSeq).toSet
     require(wSet == aSet, s"plans disagree: ${wSet.size} vs ${aSet.size}")
 
-    def time(f: () => Unit): Double = {
-      f(); val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
-    val tw = time(() => windowPlan().count())
-    val ta = time(() => aggPlan().count())
+    val (_, tw) = time(windowPlan().count(), warmUp = true)
+    val (_, ta) = time(aggPlan().count(), warmUp = true)
     println(f"PROBE topk: rows=$n groups=$groups window=$tw%.2fs " +
       f"topk_agg=$ta%.2fs speedup=x${tw / ta}%.2f")
     df.unpersist()
@@ -1594,11 +1403,8 @@ object ScaleProbe {
       cand.filter(graft.functions.CachedRLike
         .cached_rlike(col("path"), col("__rx"))).count()
     require(builtinCount() == cachedCount(), "match sets disagree")
-    def time(f: () => Unit): Double = {
-      f(); val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
-    val tb = time(() => builtinCount())
-    val tc = time(() => cachedCount())
+    val (_, tb) = time(builtinCount(), warmUp = true)
+    val (_, tc) = time(cachedCount(), warmUp = true)
     println(f"PROBE robots: rows=$rows rules=6 builtin_rlike=$tb%.2fs " +
       f"cached_rlike=$tc%.2fs speedup=x${tb / tc}%.2f")
     urls.unpersist()
@@ -1678,10 +1484,10 @@ object ScaleProbe {
     val docs = Tables.documents(spark, sfDir)
     val pairs = llm.Dedup.jaccardPairsExact(docs, 0.8).localCheckpoint(true)
     def cc(p: org.apache.spark.sql.DataFrame, tag: String): Unit = {
-      val t0 = System.nanoTime()
-      val (labels, steps) = llm.Dedup.connectedComponentsCounted(p, 64)
-      val n = labels.count()
-      val t = (System.nanoTime() - t0) / 1e9
+      val ((n, steps), t) = time {
+        val (labels, steps) = llm.Dedup.connectedComponentsCounted(p, 64)
+        (labels.count(), steps)
+      }
       println(f"PROBE graphconv cc $tag: steps_to_fixpoint=$steps " +
         f"nodes=$n total=$t%.2fs")
     }
@@ -1794,9 +1600,6 @@ object ScaleProbe {
       data.grouped(255).foreach { g => b(g.length); g.foreach(b) }
       b(0); b(0x3b)
       out.toArray
-    }
-    def time[A](f: => A): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     // real zstd frames via zstd-jni (the reference C library Spark
     // ships for parquet — runtime-classpath only, a probe dependency)
@@ -1985,7 +1788,7 @@ object ScaleProbe {
         val df = spark.range(n)
           .select(when(col("id") >= 0, lit(blob)).as("b"))
         df.select(sum(decode(col("b")))).collect() // warm-up + correctness
-        val t = time(df.select(sum(decode(col("b")))).collect())
+        val (_, t) = time(df.select(sum(decode(col("b")))).collect())
         println(f"PROBE media $name rows=$n blob=${blob.length}%d " +
           f"time=$t%.2fs rate=${n / t}%.0f rows/s " +
           f"${n * mb / t}%.1f MB/s")

@@ -390,11 +390,6 @@ class PlanSweepSpec extends SparkSpec {
     */
   private val PlanNodeBound = 10000
 
-  private def exprNodes(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.optimizedPlan.collect { case p =>
-      p.expressions.map(e => e.collect { case _ => 1L }.sum).sum
-    }.sum
-
   test("the plan-size detector sees a deliberately re-inlined subtree") {
     import org.apache.spark.sql.functions._
     // the tarxz shape in miniature: a ~300-node concat referenced 10×
@@ -404,15 +399,15 @@ class PlanSweepSpec extends SparkSpec {
     val squared = concat((1 to 10).map(_ => substring(tenRefs, 1, 2)): _*)
     val df = noAqe.range(1).select(col("id").cast("string").as("t"))
       .select(squared.as("boom"))
-    assert(exprNodes(df) > PlanNodeBound,
-      s"sanity: the squared re-inline measures ${exprNodes(df)} nodes")
+    val n = graft.Probe.exprNodes(df)
+    assert(n > PlanNodeBound, s"sanity: the squared re-inline measures $n nodes")
   }
 
   test("no query's optimized plan exceeds the expression-node bound") {
     val dir = "/root/testdata/sf0.001"
     val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val n = exprNodes(fn(noAqe, dir))
+        val n = graft.Probe.exprNodes(fn(noAqe, dir))
         if (n > PlanNodeBound) Some(s"$name: $n expression nodes") else None
     }
     assert(offenders.isEmpty,
@@ -456,14 +451,9 @@ class PlanSweepSpec extends SparkSpec {
     * fresh anchor lap in the same commit.
     */
   test("every registered query has a lap in the committed bench anchor") {
-    val f = new java.io.File("/root/repo/bench_full.json")
+    val f = new java.io.File(graft.Bench.AnchorFile)
     assert(f.exists, "bench_full.json anchor missing from repo root")
-    val json = scala.io.Source.fromFile(f, "UTF-8").mkString
-    // keys of the "queries" object — a targeted parse keeps the gate
-    // dependency-free (the file is the Bench main's own single-line JSON)
-    val qBlock = json.substring(json.indexOf("\"queries\""))
-    val benched = "\"([A-Za-z0-9_]+)\"\\s*:".r
-      .findAllMatchIn(qBlock).map(_.group(1)).toSet
+    val benched = graft.Bench.anchorLaps(f.getPath).keySet
     val missing = graft.SparkEntry.queries.keySet.diff(benched)
     assert(missing.isEmpty,
       s"queries registered but absent from the committed bench_full.json " +

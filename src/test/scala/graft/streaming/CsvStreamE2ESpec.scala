@@ -56,11 +56,16 @@ class CsvStreamE2ESpec extends SparkSpec {
       == 20200305) // dd-MM-yyyy parsed
     // two micro-batches (maxFilesPerTrigger=1) -> two batch_id partitions
     assert(fact.select("batch_id").distinct().count() == 2)
+    // the commit log has one entry per micro-batch
+    def commits = new java.io.File(s"$ckpt/commits")
+      .listFiles().count(_.getName.forall(_.isDigit))
+    assert(commits == 2, s"expected 2 committed batches, saw $commits")
     // restart with same checkpoint: nothing new to process, no duplicates
     val q2 = StreamingFact.runCsvToParquet(spark, dir, txSchema,
       customers, products, out, ckpt, maxFilesPerTrigger = 1)
     q2.awaitTermination()
     assert(spark.read.parquet(out).count() == 4)
+    assert(commits == 2)
   }
 
   test("one parquet file per micro-batch, however many splits the batch scans") {

@@ -1,9 +1,11 @@
 #!/bin/bash
 # Run a graft main directly against the compiled classes + the image's
 # Spark jars, bypassing sbt (lets measurement laps run while sbt holds
-# the project lock). Usage: tools/run_graft.sh graft.TimeOne q33_basket_rules
+# the project lock). Usage: tools/run_graft.sh graft.Probe time q33_basket_rules
+# (test-scope mains such as graft.ScaleProbe run too, after sbt Test/compile)
 MAIN="$1"; shift
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+CP="$CP:${CP%%/classes:*}/test-classes" # test-classes sits beside classes
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke \
   java.base/java.lang.reflect java.base/java.io java.base/java.net \
